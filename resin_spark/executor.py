@@ -10,11 +10,13 @@ The reference's pipeline (SearchSession.cs:48-71) becomes:
 * score  (X6, north rule): BM25 with driver-computed idf/avgdl constants
          folded into a single JVM expression (float64, op-order identical
          to the oracle so scores match bit-for-bit).
-* reduce (X4/X5): Resin's boolean fold, faithfully, as DataFrame joins —
-         and=inner+sum, or=left+boost-existing-only, not=left_anti,
-         including the quirks: an unmatched term is *skipped* (not
-         intersected) and a term merged into an *empty* result re-inserts
-         all its postings (Reducer.cs:86-149).
+* reduce (X4/X5): Resin's boolean fold, faithfully, over MASK CLASSES —
+         one per-doc aggregation tags each doc with the set of query keys
+         it matched; the fold (and=intersect+sum, or=boost-existing-only,
+         not=subtract) runs driver-side over those classes, including the
+         quirks: an unmatched term is *skipped* (not intersected) and a
+         term merged into an *empty* result re-inserts all its postings
+         (Reducer.cs:86-149).  The score is one class-keyed expression.
 * sort   (X7): orderBy(score desc, doc_id asc).offset(skip).limit(take)
          => TakeOrderedAndProject (true distributed top-k, no full sort).
 * fetch  (X8): late materialization — broadcast the k result keys against
@@ -23,11 +25,13 @@ The reference's pipeline (SearchSession.cs:48-71) becomes:
 
 Scale notes: the only data-proportional work is the postings scan of the
 queried terms' blocks; everything after operates on matched postings only.
-The per-query jobs (df lookup, emptiness probes) touch <= #terms rows.
+The df lookup touches <= #terms rows; the class histogram (only when the
+fold's branches depend on the data) aggregates matched postings.
 """
 
 from __future__ import annotations
 
+import json
 import math
 import os
 from functools import reduce as _functools_reduce
@@ -558,10 +562,7 @@ class SearchEngine:
         toks = tokenize_py(phrase)
         docs = self.documents()
         if not toks:
-            empty = self.spark.range(0).select(
-                F.col("id").alias("doc_id"), F.lit(0.0).alias("score"))
-            return self._project_ranked(
-                docs.join(F.broadcast(empty), "doc_id"), docs, select)
+            return self._fetch_hits([], select)
         q = parse_query({"and": {field: phrase}})
         if len(toks) == 1:
             # single-token phrase == single-term query
@@ -831,15 +832,11 @@ class SearchEngine:
     def _key_col(self, term_identity: str) -> str:
         return "term" if term_identity == "surface" else "chars_key"
 
-    # mask-fold fast path bounds: one bit per unique (field, term) key
+    # driver-scored path bounds: its numpy class mask is int64 (one bit
+    # per unique (field, term) key), and its per-class scoring loop is
+    # bounded in class count.  The distributed fold has neither limit.
     _MASK_MAX_KEYS = 63
     _MASK_MAX_CLASSES = 4096
-    # above this many mask classes the score expression switches from a
-    # nested when-chain (codegen-friendly at small depth) to one flat
-    # create_map lookup — Catalyst's recursive analyzer overflows the
-    # JVM stack on chains ~1000+ deep, and the static fold enumerates up
-    # to 4095 classes for 12 keys
-    _MASK_WHEN_CHAIN_MAX = 256
     # search(): up to this many hits fetch via eager top-k + pushed-down
     # doc_id IN point scan (beyond it, the lazy broadcast-join path) —
     # but only when the docs table is big enough that skipping its full
@@ -1952,22 +1949,24 @@ class SearchEngine:
             import pyarrow.parquet as pq
 
             for path, gs in by_path.items():
-                # open lazily per fetch (footer parse is ~ms): the index
-                # holds PATHS, not handles, so a many-file layout never
-                # pins thousands of file descriptors for the engine's
-                # lifetime
-                pf = pq.ParquetFile(path)
-                for g in sorted(gs):
-                    part = pf.read_row_group(g, columns=names)
-                    if any(n not in part.column_names for n in names):
-                        # pyarrow silently DROPS unknown names from
-                        # ``columns`` — e.g. the hive partition column
-                        # lives in the directory, not the file, and a
-                        # drifted file could lack a column the unified
-                        # dataset schema still lists.  Refuse rather
-                        # than return a narrower table.
-                        return None
-                    parts.append(part)
+                # open lazily per fetch (footer parse is ~ms) and close
+                # on the way out: the index holds PATHS, not handles, so
+                # a many-file layout never pins thousands of file
+                # descriptors, and a fetch burst releases each one
+                # deterministically
+                with pq.ParquetFile(path) as pf:
+                    for g in sorted(gs):
+                        part = pf.read_row_group(g, columns=names)
+                        if any(n not in part.column_names for n in names):
+                            # pyarrow silently DROPS unknown names from
+                            # ``columns`` — e.g. the hive partition
+                            # column lives in the directory, not the
+                            # file, and a drifted file could lack a
+                            # column the unified dataset schema still
+                            # lists.  Refuse rather than return a
+                            # narrower table.
+                            return None
+                        parts.append(part)
             tbl = parts[0] if len(parts) == 1 else pa.concat_tables(parts)
             return tbl.filter(pc.is_in(
                 tbl["doc_id"], value_set=pa.array(need, type=pa.int64())))
@@ -1984,7 +1983,7 @@ class SearchEngine:
         table — no full scan, no gate: the hits are already collected so
         the point path costs no extra action here)."""
         docs = self.documents()
-        if (hits and len(hits) <= self._POINT_FETCH_MAX_K
+        if (len(hits) <= self._POINT_FETCH_MAX_K
                 and self._pa_dataset("docs") is not None):
             # embedded point fetch: read exactly the hit rows through
             # pyarrow (row-group stats prune on the doc_id filter — the
@@ -1997,6 +1996,14 @@ class SearchEngine:
             from pyspark.sql.types import DoubleType, StructField, StructType
 
             cols = self._ranked_cols(docs, sel)
+            by_name = {fld.name: fld for fld in docs.schema.fields}
+            schema = StructType([by_name[c] for c in cols]
+                                + [StructField("score", DoubleType())])
+            if not hits:
+                # createDataFrame of an EMPTY local frame launches a job;
+                # one all-null local row cut by limit(0) stays job-free
+                return self.spark.createDataFrame(
+                    [(None,) * len(schema.fields)], schema=schema).limit(0)
             names = list(dict.fromkeys(["doc_id"] + cols))
             need = [int(d) for d, _ in hits]
             tbl = (self._docs_point_table(need, names)
@@ -2018,12 +2025,7 @@ class SearchEngine:
                 ["score", "conv_id", "turn_idx"],
                 ascending=[False, True, True], kind="mergesort",
             )[cols + ["score"]]
-            by_name = {fld.name: fld for fld in docs.schema.fields}
-            return self.spark.createDataFrame(
-                pdf,
-                schema=StructType([by_name[c] for c in cols]
-                                  + [StructField("score", DoubleType())]),
-            )
+            return self.spark.createDataFrame(pdf, schema=schema)
         lit = self.spark.createDataFrame(
             [(int(d), float(s)) for d, s in hits],
             "doc_id long, score double",
@@ -2044,128 +2046,46 @@ class SearchEngine:
         return self._docs_size
 
     def _ranked(self, q: Query, term_identity: str) -> DataFrame:
-        """(doc_id, score) after the boolean fold.
+        """(doc_id, score) after the boolean fold — the MASK-CLASS fold,
+        the one distributed form of Resin's Reducer (Reducer.cs:86-149).
 
-        Two physical strategies, identical semantics (the differential
-        fuzz suite runs both against the oracle):
+        One per-doc aggregation over the decoded postings gives each
+        doc's per-key (tf, dl) and its CLASS: the comma-joined indices of
+        the query keys it matched.  Docs in one class behave identically
+        under the fold, so the whole fold runs driver-side over the
+        classes (_mask_reduce, emptiness decisions as exact set checks —
+        no per-merge probe jobs, no joins), yielding S: class → ordered
+        key indices whose BM25 weights sum into the score.  S ships as
+        one map literal and the score is one fixed-size expression:
+        ``aggregate(S[cls], 0.0, (acc, i) -> acc + w[i])`` over the
+        per-key weight array, the oracle's left-associative float64 sum
+        (0.0 + w == w); docs whose class is not in S are dropped.
 
-        * multi-term queries (the common case) use the MASK FOLD: one
-          per-doc aggregation over the decoded postings produces each
-          doc's matched-term bitmask + per-term (tf, dl); the entire
-          Reducer fold then runs driver-side over the observed mask
-          CLASSES (docs with identical term membership behave
-          identically), where emptiness decisions are exact set checks —
-          no per-merge isEmpty probe jobs, no iterated self-joins.  Two
-          jobs touch scored DATA per query (mask histogram + top-k) with
-          one shuffle over matched postings; the remaining Spark-side
-          actions are metadata/k-row sized (df lookup on the cached term
-          directory, broadcast exchange of the top-k frame).
-        * single-term queries stream straight through (df off the block
-          metadata, no aggregation); pathological shapes (> 63 unique
-          keys, > 4096 mask classes) fall back to the iterated-join fold.
-        """
+        Classes come from the full enumeration when no fold branch can
+        depend on the data (_fold_is_static, ≤ 12 keys — no histogram
+        job), else from a histogram job over the persisted per-doc frame.
+        A single surface-mode key has one row per doc and skips the
+        aggregation."""
         # evict the previous query's persisted postings: a long-lived
         # engine must not accumulate one cached RDD per query (a caller
         # still holding an old result DataFrame just recomputes it)
         self._evict_persisted()
-        key_col = self._key_col(term_identity)
+        empty = self.spark.range(0).select(
+            F.col("id").alias("doc_id"), F.lit(0.0).alias("score"))
         terms = query_terms(q)
         if not terms:
-            return self.spark.range(0).select(
-                F.col("id").alias("doc_id"), F.lit(0.0).alias("score")
-            )
+            return empty
+        surface = term_identity == "surface"
         by_field: dict[str, set[str]] = {}
         for t in terms:
-            tok = t.token if term_identity == "surface" else chars_key_py(t.token)
+            tok = t.token if surface else chars_key_py(t.token)
             by_field.setdefault(t.field, set()).add(tok)
         keys = sorted((f, tok) for f, toks in by_field.items() for tok in toks)
-        if 1 < len(keys) <= self._MASK_MAX_KEYS:
-            out = self._ranked_mask(q, by_field, keys, term_identity)
-            if out is not None:
-                return out
-
-        # map phase: pushed-down postings scan of exactly the queried terms
-        pred = _functools_reduce(
-            lambda a, b: a | b,
-            [
-                (F.col("field") == f) & F.col(key_col).isin(sorted(toks))
-                for f, toks in by_field.items()
-            ],
-        )
-        matched = self.postings().filter(pred)
-        decoded = B.decoded_postings(
-            matched.select("field", key_col, "segment",
-                           "doc_ids_bin", "tfs_bin", "dls_bin")
-            .withColumnRenamed(key_col, "term")
-        )
-        if term_identity == "charbag":
-            # anagrams collide into one term node: occurrences merge
-            # (Resin MergeDocIds, GraphBuilder.cs:243-266)
-            decoded = decoded.groupBy("field", "term", "doc_id").agg(
-                F.sum("tf").alias("tf"), F.max("dl").alias("dl")
-            )
-        n_terms_total = sum(len(toks) for toks in by_field.values())
-        if n_terms_total > 1:
-            # the boolean fold references the scored frame once per term —
-            # persist so blocks decode once.  Single-term queries stream
-            # straight through (no cache churn).
-            decoded = decoded.persist()
-            self._cached.append(decoded)
-        scored_base = decoded
-
-        # df per (field, term-key): distinct docs per term.  Surface mode
-        # reads it off the df_block METADATA (each doc lives in exactly
-        # one (segment, block), so Σ df_block = df) — no posting decode.
-        # Charbag mode must merge anagram postings first, so it counts on
-        # the decoded frame.
-        if term_identity == "surface":
-            df_map = self._surface_df_map(by_field, pred)
-        else:
-            df_rows = (
-                scored_base.groupBy("field", "term")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .collect()
-            )
-            df_map = {(r["field"], r["term"]): r["df"] for r in df_rows}
-        stats = self.stats()
-
-        # one scoring expression; idf/avgdl folded in as literals with the
-        # same float64 op tree as the oracle (reference.py weight())
-        # fields that were never indexed have no stats row and can match
-        # no postings — they contribute nothing to the score expression
-        empty = {"n_docs": 0, "avgdl": 1.0}
-        idf_expr = F.lit(0.0)
-        for (f, tkey), dfv in df_map.items():
-            idf_expr = F.when(
-                (F.col("field") == f) & (F.col("term") == tkey),
-                F.lit(self.idf(stats.get(f, empty)["n_docs"], dfv)),
-            ).otherwise(idf_expr)
-        avgdl_expr = F.lit(1.0)
-        for f in by_field:
-            if f in stats:
-                avgdl_expr = F.when(
-                    F.col("field") == f, F.lit(stats[f]["avgdl"])
-                ).otherwise(avgdl_expr)
-        tf_d = F.col("tf").cast("double")
-        dl_d = F.col("dl").cast("double")
-        denom = tf_d + F.lit(K1) * (F.lit(1.0 - BB) + F.lit(BB) * dl_d / avgdl_expr)
-        scored = scored_base.withColumn("score", idf_expr * (tf_d / denom))
-
-        result, _ = self._reduce_query(q, (None, False), scored, df_map, term_identity)
-        if result is None:
-            return self.spark.range(0).select(
-                F.col("id").alias("doc_id"), F.lit(0.0).alias("score")
-            )
-        return result
-
-    # ---------------------------------------------------- mask-fold path
-    def _ranked_mask(self, q: Query, by_field: dict, keys: list,
-                     term_identity: str) -> DataFrame | None:
-        """One-aggregation boolean fold (see _ranked docstring).  Returns
-        None to signal fallback to the iterated-join fold (mask-class
-        explosion)."""
-        key_col = self._key_col(term_identity)
         idx = {k: i for i, k in enumerate(keys)}
+        n = len(keys)
+
+        # map phase: pushed-down postings scan of exactly the queried keys
+        key_col = self._key_col(term_identity)
         pred = _functools_reduce(
             lambda a, b: a | b,
             [
@@ -2173,82 +2093,81 @@ class SearchEngine:
                 for f, toks in by_field.items()
             ],
         )
-        matched = self.postings().filter(pred)
         decoded = B.decoded_postings(
-            matched.select("field", key_col, "segment",
-                           "doc_ids_bin", "tfs_bin", "dls_bin")
+            self.postings().filter(pred)
+            .select("field", key_col, "segment",
+                    "doc_ids_bin", "tfs_bin", "dls_bin")
             .withColumnRenamed(key_col, "term")
         )
+        if surface and n == 1:
+            per_doc = decoded.select(
+                "doc_id", F.col("tf").alias("tf0"), F.col("dl").alias("dl0"),
+                F.lit("0").alias("cls"))
+        else:
+            # per-doc aggregation: per-key (tf, dl) + the matched-key class.
+            # sum(tf) doubles as the charbag anagram merge (surface mode
+            # has one row per (doc, key) so sum == the value).
+            def cond(i: int):
+                f, tok = keys[i]
+                return (F.col("field") == f) & (F.col("term") == tok)
 
-        # per-doc aggregation: matched-key bitmask + per-key (tf, dl).
-        # sum(tf) doubles as the charbag anagram merge (surface mode has
-        # one row per (doc, key) so sum == the value).
-        def cond(i: int):
-            f, tok = keys[i]
-            return (F.col("field") == f) & (F.col("term") == tok)
-
-        aggs = []
-        for i in range(len(keys)):
-            aggs.append(F.sum(F.when(cond(i), F.col("tf"))).alias(f"tf{i}"))
-            aggs.append(F.max(F.when(cond(i), F.col("dl"))).alias(f"dl{i}"))
-            aggs.append(
-                F.max(F.when(cond(i), F.lit(1 << i)).otherwise(F.lit(0)))
-                .cast("long").alias(f"m{i}")
+            aggs = []
+            for i in range(n):
+                aggs.append(F.sum(F.when(cond(i), F.col("tf"))).alias(f"tf{i}"))
+                aggs.append(F.max(F.when(cond(i), F.col("dl"))).alias(f"dl{i}"))
+            per_doc = decoded.groupBy("doc_id").agg(*aggs).withColumn(
+                "cls",
+                F.concat_ws(",", *[F.when(F.col(f"tf{i}").isNotNull(),
+                                          F.lit(str(i))) for i in range(n)]),
             )
-        per_doc = decoded.groupBy("doc_id").agg(*aggs).withColumn(
-            "mask",
-            _functools_reduce(lambda a, b: a + b,
-                              [F.col(f"m{i}") for i in range(len(keys))]),
-        )
 
         df_by_key = None
-        if term_identity == "surface":
+        if surface:
             # df off the term directory (driver mirror when it fits, else
             # the persisted distributed frame — never a parquet re-scan)
             df_map = self._surface_df_map(by_field, pred)
             df_by_key = [df_map.get(k, 0) for k in keys]
-
-        if (df_by_key is not None and len(keys) <= 12
+        if (df_by_key is not None and n <= 12
                 and self._fold_is_static(q, df_by_key, idx, term_identity)):
             # STATIC fold (no and/or merge ever lands on a result whose
             # emptiness is data-dependent — covers 2-term ANDs, pure ORs,
-            # NOT-subtraction chains): enumerate the full mask space, no
+            # NOT-subtraction chains): enumerate the full class space, no
             # histogram job.  Query = df-metadata job + top-k job, same
             # job count as a single-term query.
-            observed = dict.fromkeys(range(1, 1 << len(keys)))
+            observed = dict.fromkeys(range(1, 1 << n))
         else:
             per_doc = per_doc.persist()
             self._cached.append(per_doc)
-            # one tiny job: the mask histogram materializes the persisted
+            # one tiny job: the class histogram materializes the persisted
             # agg and yields the observed classes the fold runs over (and
             # per-key df for charbag mode, where metadata df would count
             # pre-merge anagram postings)
-            hist = per_doc.groupBy("mask").agg(
+            hist = per_doc.groupBy("cls").agg(
                 F.count(F.lit(1)).alias("n")).collect()
-            observed = {r["mask"]: r["n"] for r in hist}
+            observed = {
+                sum(1 << int(i) for i in r["cls"].split(",")): r["n"]
+                for r in hist
+            }
             if df_by_key is None:
                 df_by_key = [
-                    sum(n for m, n in observed.items() if (m >> i) & 1)
-                    for i in range(len(keys))
+                    sum(c for m, c in observed.items() if (m >> i) & 1)
+                    for i in range(n)
                 ]
 
         state = self._mask_reduce(q, None, observed, df_by_key, idx,
                                   term_identity)
         if state is None or not state[0]:
-            return self.spark.range(0).select(
-                F.col("id").alias("doc_id"), F.lit(0.0).alias("score")
-            )
+            return empty
         masks, S = state
-        if len(masks) > self._MASK_MAX_CLASSES:
-            return None  # pathological; iterated-join fold handles it
 
+        # per-key BM25 weight, idf/avgdl folded in as literals with the
+        # same float64 op tree as the oracle (reference.py weight()).
+        # Unmatched keys (df 0) never appear in S, so their slot is unread.
         stats = self.stats()
-        empty = {"n_docs": 0, "avgdl": 1.0}
-        w = {}
+        no_stats = {"n_docs": 0, "avgdl": 1.0}
+        w = []
         for (f, tok), i in idx.items():
-            if not df_by_key[i]:
-                continue
-            st = stats.get(f, empty)
+            st = stats.get(f, no_stats)
             idf = self.idf(st["n_docs"], df_by_key[i])
             avgdl = st["avgdl"] if st["n_docs"] else 1.0
             tf_d = F.col(f"tf{i}").cast("double")
@@ -2256,37 +2175,22 @@ class SearchEngine:
             denom = tf_d + F.lit(K1) * (
                 F.lit(1.0 - BB) + F.lit(BB) * dl_d / F.lit(avgdl)
             )
-            w[i] = F.lit(idf) * (tf_d / denom)
-
-        # score per mask class = the fold's addition sequence, left-assoc
-        # (same float64 op order as the oracle / join fold)
-        pairs = []
-        for m in sorted(masks):
-            terms_sum = _functools_reduce(
-                lambda a, b: a + b, [w[i] for i in S[m]]
-            ) if S[m] else F.lit(0.0)
-            pairs.append((int(m), terms_sum))
-        if len(pairs) <= self._MASK_WHEN_CHAIN_MAX:
-            score = F.lit(0.0)
-            for m, ts in pairs:
-                score = F.when(F.col("mask") == m, ts).otherwise(score)
-        else:
-            # many classes (the static fold enumerates the FULL mask
-            # space — up to 4095 for 12 keys): a nested when-chain of
-            # that depth overflows the JVM analyzer stack
-            # (StackOverflowError in Catalyst's recursive tree walk), so
-            # build one FLAT map literal instead — same per-class float64
-            # expressions as map values, depth 1.  The isin filter below
-            # guarantees every surviving row's mask has a map entry.
-            args: list = []
-            for m, ts in pairs:
-                args.append(F.lit(m).cast("long"))
-                args.append(ts.cast("double"))
-            score = F.element_at(F.create_map(*args),
-                                 F.col("mask").cast("long"))
+            w.append(F.lit(idf) * (tf_d / denom))
+        weights = F.array(*w)
+        table = F.from_json(
+            F.lit(json.dumps({
+                ",".join(str(i) for i in range(n) if (m >> i) & 1): list(S[m])
+                for m in masks
+            })),
+            "map<string,array<int>>",
+        )
         return (
-            per_doc.filter(F.col("mask").isin([int(m) for m in masks]))
-            .select("doc_id", score.alias("score"))
+            per_doc.withColumn("ks", F.element_at(table, F.col("cls")))
+            .where(F.col("ks").isNotNull())
+            .select("doc_id", F.aggregate(
+                "ks", F.lit(0.0),
+                lambda acc, i: acc + F.element_at(weights, i + 1),
+            ).alias("score"))
         )
 
     def _fold_is_static(self, q: Query, df_by_key: list, idx: dict,
@@ -2335,9 +2239,10 @@ class SearchEngine:
         return ok
 
     def _mask_merge(self, state, incoming, op: str):
-        """Reducer.cs:86-149 over mask classes (exact twin of _merge with
-        DataFrames replaced by (masks, S) where S[m] is the ordered tuple
-        of term-instance key indices whose weights sum into the score)."""
+        """Reducer.cs:86-149 over mask classes: reference._merge with the
+        per-doc dicts replaced by (masks, S), where S[m] is the ordered
+        tuple of term-instance key indices whose weights sum into the
+        score of every doc in class m."""
         if state is None or not state[0]:
             if op == "not":
                 return state
@@ -2357,7 +2262,8 @@ class SearchEngine:
 
     def _mask_reduce(self, q: Query, state, observed: dict, df_by_key: list,
                      idx: dict, term_identity: str):
-        """_reduce_query over mask classes — identical structure."""
+        """reference._reduce_query over mask classes — identical
+        structure."""
         query_state = None
         matched_any = False
         for t in q.terms:
@@ -2382,7 +2288,7 @@ class SearchEngine:
             state = self._mask_merge(state, query_state, q.op)
         elif q.op == "and" and state is not None:
             # empty clause dict AND-merged clears the result
-            # (Reducer.cs:24-39) — mirrors _reduce_query/reference.py
+            # (Reducer.cs:24-39) — mirrors reference._reduce_query
             state = (set(), {})
         if q.and_q is not None:
             state = self._mask_reduce(q.and_q, state, observed, df_by_key,
@@ -2393,97 +2299,6 @@ class SearchEngine:
         if q.not_q is not None:
             state = self._mask_reduce(q.not_q, state, observed, df_by_key,
                                       idx, term_identity)
-        return state
-
-    def _term_df(self, scored: DataFrame, field: str, tkey: str) -> DataFrame:
-        return scored.filter(
-            (F.col("field") == field) & (F.col("term") == tkey)
-        ).select("doc_id", "score")
-
-    def _merge(self, state: tuple[DataFrame | None, bool], incoming: DataFrame,
-               op: str, incoming_nonempty: bool = False) -> tuple[DataFrame | None, bool]:
-        """Reducer.cs:86-149 as DataFrame joins.  ``None`` or empty result
-        behaves like Resin's empty dict (insert-all for and/or).
-
-        The bool in ``state`` is known_nonempty: emptiness only needs a
-        runtime probe (isEmpty, a limit-1 job) after an intersection may
-        have emptied the result — insert-all and OR/NOT merges preserve
-        non-emptiness, so single-term / pure-OR queries run probe-free.
-        ``incoming_nonempty`` carries the same knowledge for the incoming
-        frame: a matched TERM frame is non-empty by construction, but a
-        sub-clause result may itself be an emptied intersection — marking
-        it non-empty unseen would poison later insert-all decisions."""
-        result, known_nonempty = state
-        if result is None or (not known_nonempty and result.isEmpty()):
-            if op == "not":
-                return result, False
-            return incoming, incoming_nonempty
-        r = result.alias("r")
-        t = incoming.alias("t")
-        on = F.col("r.doc_id") == F.col("t.doc_id")
-        if op == "and":
-            out = r.join(t, on, "inner").select(
-                F.col("r.doc_id").alias("doc_id"),
-                (F.col("r.score") + F.col("t.score")).alias("score"),
-            )
-            return out, False  # intersection may be empty -> probe next time
-        if op == "or":
-            out = r.join(t, on, "left").select(
-                F.col("r.doc_id").alias("doc_id"),
-                (F.col("r.score") + F.coalesce(F.col("t.score"), F.lit(0.0))).alias("score"),
-            )
-            return out, known_nonempty
-        out = r.join(t, on, "left_anti").select(
-            F.col("r.doc_id").alias("doc_id"), F.col("r.score").alias("score")
-        )
-        return out, False  # NOT can empty the result
-
-    def _reduce_query(self, q: Query, state: tuple[DataFrame | None, bool],
-                      scored: DataFrame, df_map: dict,
-                      term_identity: str) -> tuple[DataFrame | None, bool]:
-        """Reducer.cs:9-84 — terms into a fresh frame, merge under the
-        clause op, then chained and/or/not sub-queries."""
-        query_state: tuple[DataFrame | None, bool] = (None, False)
-        matched_any = False
-        for t in q.terms:
-            tkey = t.token if term_identity == "surface" else chars_key_py(t.token)
-            if df_map.get((t.field, tkey), 0) == 0:
-                continue  # unmatched term skipped (Reducer.cs:88-89)
-            matched_any = True
-            term_df = self._term_df(scored, t.field, tkey)
-            if q.op == "not":
-                # clause-scoped NOT (query.py deviation note): union the
-                # clause's postings as the subtraction set
-                if query_state[0] is None:
-                    query_state = (term_df, True)
-                else:
-                    query_state = (
-                        query_state[0].unionByName(term_df)
-                        .groupBy("doc_id")
-                        .agg(F.max("score").alias("score")),
-                        True,
-                    )
-            else:
-                # a matched term's frame is non-empty by construction
-                query_state = self._merge(query_state, term_df, t.op,
-                                          incoming_nonempty=True)
-        if matched_any:
-            state = self._merge(state, query_state[0], q.op,
-                                incoming_nonempty=query_state[1])
-        elif q.op == "and" and state[0] is not None:
-            # the clause's fresh dict stayed empty (terms all unmatched,
-            # values that tokenized to nothing, or a pure nesting
-            # container) — Resin merges that empty dict under the clause
-            # op regardless, and an AND-merge of an empty dict CLEARS a
-            # non-empty result (Reducer.cs:24-39).  OR/NOT merges of an
-            # empty dict are no-ops.  Mirrors reference.py exactly.
-            state = (state[0].limit(0), False)
-        if q.and_q is not None:
-            state = self._reduce_query(q.and_q, state, scored, df_map, term_identity)
-        if q.or_q is not None:
-            state = self._reduce_query(q.or_q, state, scored, df_map, term_identity)
-        if q.not_q is not None:
-            state = self._reduce_query(q.not_q, state, scored, df_map, term_identity)
         return state
 
     def diagnostics(self, query: dict | Query | None = None) -> dict:

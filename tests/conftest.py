@@ -72,7 +72,7 @@ def engine_s(request, engine):
     size-gated driver-scored fast path with embedded pyarrow IO — the
     default for a local root at fixture scale), 'driver_sparkio' (driver
     scoring through Spark collects, the remote-root form), 'distributed'
-    (driver scoring disabled, the mask/join folds as before), and
+    (driver scoring disabled, so the distributed mask-class fold runs), and
     'and_pruned' (Σdf cap 0, so every pure-AND query runs the
     block-pruned intersection path and everything else falls back to the
     distributed fold), 'blockmax' (single-term threshold 0, so every

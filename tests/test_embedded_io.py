@@ -68,6 +68,46 @@ def test_embedded_warm_query_is_job_free(engine):
         sc.setJobGroup(None, None)
         assert rows, q
         assert len(sc.statusTracker().getJobIdsForGroup(g)) == 0, q
+    # empty results too: an emptied AND, an unmatched term, and a phrase
+    # whose terms never stand adjacent all return a job-free empty frame
+    # with the usual columns
+    engine.phrase_search("banana zzznope", k=5).collect()  # warm phrase path
+    engine.clear_cache()
+    empties = [
+        lambda: engine.search({"and": {"text": "uterm0 uterm1"}}, k=5),
+        lambda: engine.search({"or": {"text": "zzznope"}}, k=5),
+        lambda: engine.phrase_search("banana zzznope", k=5),
+    ]
+    for run in empties:
+        g = uuid.uuid4().hex
+        sc.setJobGroup(g, "probe")
+        out = run()
+        rows = out.collect()
+        engine.clear_cache()
+        sc.setJobGroup(None, None)
+        assert rows == [] and out.columns[-1] == "score", out.columns
+        assert len(sc.statusTracker().getJobIdsForGroup(g)) == 0, out.columns
+
+
+def test_point_fetch_burst_keeps_fd_count_flat(engine):
+    """Each point fetch opens the covering docs files and must close
+    them itself: the process's open descriptors stay flat across a burst
+    of a few hundred fetches."""
+    import os
+
+    names = ["doc_id", "conv_id", "turn_idx", "text"]
+    ids = sorted(engine._pa_dataset("docs").to_table(
+        columns=["doc_id"])["doc_id"].to_pylist())
+    assert engine._docs_point_table(ids[:2], names) is not None
+
+    def n_fds() -> int:
+        return len(os.listdir("/proc/self/fd"))
+
+    before = n_fds()
+    for i in range(300):
+        need = [ids[i % len(ids)], ids[(7 * i) % len(ids)]]
+        assert engine._docs_point_table(need, names).num_rows >= 1
+    assert n_fds() <= before + 2
 
 
 def test_embedded_respects_snapshot_pin(spark, tmp_path):

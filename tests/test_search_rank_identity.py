@@ -5,7 +5,7 @@ import math
 
 import pytest
 
-from resin_spark.fixtures import FRUIT_WORDS
+from resin_spark.fixtures import FILLER_WORDS, FRUIT_WORDS
 from resin_spark.reference import oracle_search
 
 QUERIES = (
@@ -48,6 +48,16 @@ QUERIES = (
                                         "and": {"text": "banana"}}}, {}),
         ("x_emptied_then_or", {"and": {"text": "uterm0 uterm1",
                                        "or": {"text": "apple"}}}, {}),
+        # more keys than the driver path's 64-bit class mask holds: every
+        # strategy runs the distributed class fold (70 fixture-vocabulary
+        # tokens plus three that never occur)
+        ("x_wide_or_73_keys", {"or": {"text": " ".join(
+            FRUIT_WORDS + FILLER_WORDS[:59] + ["zzznope", "qqnada", "nothere"])}},
+         {}),
+        # one key used twice in the clause tree: the class's weight list
+        # is S[m] = (0, 0), the same weight summed twice
+        ("x_repeated_key", {"or": {"text": "apple",
+                                   "and": {"text": "apple"}}}, {}),
     ]
 )
 
@@ -204,21 +214,28 @@ def test_and_block_pruned_empty_intersection_falls_back(engine, oracle,
     assert calls, "expected the distributed fold after the empty intersection"
 
 
-def test_wide_or_mask_fold_flat_map_expression(spark, engine, oracle,
-                                               fixture_rows):
-    """A 12-key static fold enumerates 4095 mask classes; the nested
-    when-chain form of the score expression overflowed the JVM analyzer
-    stack (StackOverflowError in Catalyst's recursive tree walk — found
-    by deep_fuzz seed 555).  Above _MASK_WHEN_CHAIN_MAX classes the
-    expression is now one flat create_map lookup; this pins the wide-OR
-    shape through the DISTRIBUTED fold against the oracle."""
+def test_wide_or_single_score_expression(spark, engine, oracle,
+                                         fixture_rows):
+    """A 12-key static fold enumerates all 4095 classes, so the score
+    must not grow with the class count: an expression tree per class
+    overflowed Catalyst's analyzer stack on this shape (deep_fuzz seed
+    555).  Pins the one fixed-size aggregate score expression and the
+    wide-OR ranking through the distributed fold against the oracle."""
+    from resin_spark.query import parse_query
+
     q = {"or": {"text": "apple apples banana cantalope the a hotterm "
                         "uterm0 uterm1 uterm2 uterm3 uterm4"}}
     want = oracle_search(oracle, q, k=10)
     assert want
+    # the score projection (top node of the analyzed plan): one
+    # aggregate over the class's key list, no per-class branches
+    top = (engine._ranked(parse_query(q), "surface")
+           ._jdf.queryExecution().analyzed().simpleString(1 << 20))
+    assert top.startswith("Project") and top.count("aggregate(") == 1, top
+    assert "CASE WHEN" not in top and "map(" not in top, top
     engine._DRIVER_SCORE_MAX_POSTINGS = -1  # force the distributed fold
     try:
         got = engine.topk(q, k=10)
     finally:
         del engine.__dict__["_DRIVER_SCORE_MAX_POSTINGS"]
-    _assert_rank_identical(got, want, "wide_or_flat_map")
+    _assert_rank_identical(got, want, "wide_or_single_score")
