@@ -337,7 +337,7 @@ def main() -> None:
     # order-sensitive OR candidate set is the anchor's postings, so only
     # the anchor's conv blocks decode and the hot term's postings outside
     # them never leave parquet; (b) hot anchor — bound-ordered decode
-    # early-terminates like the single-term path.  Exactness asserted
+    # early-terminates like the single hot term.  Exactness asserted
     # in-run against a same-root engine with the path disabled.
     or_blockmax: dict[str, dict] = {}
     chk_eng = SearchEngine(spark, f"{tmp}/idx_hi")

@@ -47,6 +47,77 @@ K1 = 1.2
 BB = 0.75
 
 
+class _BoundedLRU:
+    """Least-recently-used map of tuples of parallel arrays, bounded by
+    the total row count (postings, occurrences or blocks) of its
+    entries.  A value bigger than the whole budget is dropped, and a
+    zero budget stores nothing.  A value may be ``None`` (a cached
+    negative outcome, size 0): test ``key in lru`` before ``get`` to
+    tell it from a miss."""
+
+    def __init__(self, budget: int):
+        from collections import OrderedDict
+
+        self.budget = budget
+        self._d: OrderedDict = OrderedDict()
+        self.used = 0
+
+    @staticmethod
+    def _size(value) -> int:
+        return 0 if value is None else len(value[0])
+
+    def get(self, key):
+        got = self._d.get(key)
+        if key in self._d:
+            self._d.move_to_end(key)
+        return got
+
+    def put(self, key, value) -> None:
+        n = self._size(value)
+        if n > self.budget or not self.budget:
+            return
+        if key in self._d:
+            self.used -= self._size(self._d.pop(key))
+        self._d[key] = value
+        self.used += n
+        while self.used > self.budget:
+            _, ev = self._d.popitem(last=False)
+            self.used -= self._size(ev)
+
+    def clear(self) -> None:
+        self._d.clear()
+        self.used = 0
+
+    def __len__(self) -> int:
+        return len(self._d)
+
+    def __contains__(self, key) -> bool:
+        return key in self._d
+
+
+def _decode_merged(rows):
+    """Decode posting-block rows of ONE (field, term) key into its
+    sorted-unique ``(doc_id, tf, dl)`` int64 arrays.  Rows from several
+    segments may hold the same doc: tf sums over them, dl takes the max
+    (surface mode has one row per (doc, key), so both are identity).
+    The decoders are looked up on the postings module at call time, so
+    anything that wraps them there sees every decode."""
+    import numpy as np
+
+    from resin_spark import postings as P
+
+    ids = np.concatenate(
+        [P.decode_doc_ids(bytes(r["doc_ids_bin"])) for r in rows])
+    tfs = np.concatenate([P.decode_counts(bytes(r["tfs_bin"])) for r in rows])
+    dls = np.concatenate([P.decode_counts(bytes(r["dls_bin"])) for r in rows])
+    uid, inv = np.unique(ids, return_inverse=True)
+    tf = np.zeros(len(uid), dtype=np.int64)
+    np.add.at(tf, inv, tfs)
+    dl = np.zeros(len(uid), dtype=np.int64)
+    np.maximum.at(dl, inv, dls)
+    return uid, tf, dl
+
+
 class SearchEngine:
     """Facade over an index at ``root`` (SURVEY.md §7 api.py)."""
 
@@ -95,18 +166,14 @@ class SearchEngine:
         # (SessionFactory.cs:396-403): repeat queries over warm terms
         # skip the postings read entirely.  clear_cache() drops it, so
         # benchmarks that reset between trials never time a cache hit.
-        from collections import OrderedDict
-
-        self._term_lru: "OrderedDict[tuple, tuple]" = OrderedDict()
-        self._term_lru_postings = 0
+        self._term_lru = _BoundedLRU(self._TERM_LRU_MAX_POSTINGS)
         # block-stats LRU: (field, term) -> merged (bids, ub_tf, ub_dl,
         # raw_rows) bound arrays for the block-max paths (or None for a
         # term whose raw stat rows bust _BLOCKMAX_MAX_STAT_ROWS — the
         # bail outcome is deterministic at the engine's pinned snapshot,
         # so it caches too).  A repeat hot-term query skips the stats
         # scan the way the term LRU skips the postings read.
-        self._stats_lru: "OrderedDict[tuple, tuple | None]" = OrderedDict()
-        self._stats_lru_blocks = 0
+        self._stats_lru = _BoundedLRU(self._STATS_LRU_MAX_BLOCKS)
         self.stats_lru_misses = 0  # diagnostic counter (tests/bench)
         # positional-occurrence LRU: (field, term) -> (drep, pos) int64
         # arrays (one row per occurrence, PRE-candidate-filter), fed by
@@ -115,56 +182,12 @@ class SearchEngine:
         # LRU.  A repeat phrase query then skips the positional read +
         # varint decode entirely.  Bounded by total occurrences; dropped
         # by clear_cache()/refresh() with the other caches.
-        self._pos_lru: "OrderedDict[tuple, tuple]" = OrderedDict()
-        self._pos_lru_occ = 0
+        self._pos_lru = _BoundedLRU(self._POS_LRU_MAX_OCC)
         self.last_and_stats: dict = {}
         self.last_blockmax_stats: "dict | None" = None
 
     _TERM_LRU_MAX_POSTINGS = 4_000_000  # ~100 MB decoded
     _POS_LRU_MAX_OCC = 4_000_000  # ~64 MB decoded occurrence rows
-    # serve phrase verifies from the positional LRU (see
-    # _phrase_verify_positions_driver).  Forced-route test fixtures set
-    # this False so the driver_sparkio strategy keeps exercising the
-    # Spark read on a warm shared engine.
-    _POS_LRU_SERVE = True
-
-    def _lru_get(self, key: tuple):
-        got = self._term_lru.get(key)
-        if got is not None:
-            self._term_lru.move_to_end(key)
-        return got
-
-    def _lru_put(self, key: tuple, arrs: tuple) -> None:
-        n = len(arrs[0])
-        if n > self._TERM_LRU_MAX_POSTINGS:
-            return
-        old = self._term_lru.pop(key, None)
-        if old is not None:
-            self._term_lru_postings -= len(old[0])
-        self._term_lru[key] = arrs
-        self._term_lru_postings += n
-        while self._term_lru_postings > self._TERM_LRU_MAX_POSTINGS:
-            _, ev = self._term_lru.popitem(last=False)
-            self._term_lru_postings -= len(ev[0])
-
-    def _pos_lru_get(self, key: tuple):
-        got = self._pos_lru.get(key)
-        if got is not None:
-            self._pos_lru.move_to_end(key)
-        return got
-
-    def _pos_lru_put(self, key: tuple, arrs: tuple) -> None:
-        n = len(arrs[0])
-        if n > self._POS_LRU_MAX_OCC:
-            return
-        old = self._pos_lru.pop(key, None)
-        if old is not None:
-            self._pos_lru_occ -= len(old[0])
-        self._pos_lru[key] = arrs
-        self._pos_lru_occ += n
-        while self._pos_lru_occ > self._POS_LRU_MAX_OCC:
-            _, ev = self._pos_lru.popitem(last=False)
-            self._pos_lru_occ -= len(ev[0])
 
     # ------------------------------------------------------- embedded IO
     # term-df mirrors built by the embedded path group over the postings
@@ -326,10 +349,10 @@ class SearchEngine:
         appended: the Spark readers, the embedded pyarrow datasets
         (their file listing is materialized eagerly at construction, so
         an appended segment is invisible to a cached dataset even though
-        the artifact dir is unchanged), and the decoded-postings /
-        block-stats LRUs (a term's postings grow under append — a stale
-        LRU hit, or the lru_warm fast path built on it, would keep
-        serving the pre-append snapshot)."""
+        the artifact dir is unchanged), and, through clear_cache(), the
+        persisted frames and every LRU (a term's postings grow under
+        append — a stale LRU hit, or the lru_warm fast path built on it,
+        would keep serving the pre-append snapshot)."""
         self._docs_df = None
         self._postings_df = None
         self._stats = None
@@ -340,12 +363,7 @@ class SearchEngine:
             self._term_dir.unpersist()
             self._term_dir = None
         self._pa_cache.clear()
-        self._term_lru.clear()
-        self._term_lru_postings = 0
-        self._stats_lru.clear()
-        self._stats_lru_blocks = 0
-        self._pos_lru.clear()
-        self._pos_lru_occ = 0
+        self.clear_cache()
 
     def doc_count(self) -> int:
         """S13 — GetDocCount (SessionFactory.cs:54-62).  Every stats row
@@ -604,6 +622,8 @@ class SearchEngine:
         adjacent = F.instr(norm, needle) > 0
         # the positional branch already paid for the driver hits — reuse
         hits = pos_hits if use_pos else self._driver_hits(q, 0, 0)
+        if hits == []:
+            return self._fetch_hits([], select)
         if (hits is not None and len(hits) <= self._PHRASE_POINT_MAX_CANDIDATES
                 and self._pa_dataset("docs") is not None):
             # embedded verify: candidate texts via one pyarrow point
@@ -611,8 +631,6 @@ class SearchEngine:
             # to the JVM token stream), final frame via the job-free
             # embedded point fetch.  hits arrive (score desc, doc_id asc)
             # — the ranking order — so the page is a plain slice.
-            if not hits:
-                return self._fetch_hits([], select)
             import pyarrow.dataset as pads
 
             from resin_spark.tokenizer import tokenize_pandas
@@ -637,16 +655,11 @@ class SearchEngine:
             # driver-local relation measured 28 s at sf0.1 ("banana
             # cantalope": ~180k AND candidates), vs ~1 s for the
             # distributed rescore + one docs scan.
-            if not hits:
-                lit = self.spark.createDataFrame([], "doc_id long, score double")
-            else:
-                lit = self.spark.createDataFrame(
-                    [(int(d), float(s)) for d, s in hits],
-                    "doc_id long, score double")
-            cand = docs
-            if hits:
-                cand = docs.filter(
-                    F.col("doc_id").isin([int(d) for d, _ in hits]))
+            lit = self.spark.createDataFrame(
+                [(int(d), float(s)) for d, s in hits],
+                "doc_id long, score double")
+            cand = docs.filter(
+                F.col("doc_id").isin([int(d) for d, _ in hits]))
             out = cand.join(F.broadcast(lit), "doc_id").filter(adjacent)
         else:
             ranked = self._ranked(q, "surface")
@@ -695,8 +708,7 @@ class SearchEngine:
         pos_cached: dict[str, tuple] = {}
         miss = []
         for t in uniq:
-            got = (self._pos_lru_get((field, t))
-                   if self._POS_LRU_SERVE else None)
+            got = self._pos_lru.get((field, t))
             if got is not None:
                 pos_cached[t] = got
             else:
@@ -765,7 +777,7 @@ class SearchEngine:
                     # the read covered the term's ENTIRE df (the mirror
                     # df is the same Σ df_block quantity) — cacheable as
                     # a full decode, like the term LRU's rule
-                    self._pos_lru_put((field, t), (drep, pos))
+                    self._pos_lru.put((field, t), (drep, pos))
             # keep only candidate docs' occurrences (dense index = rank
             # in the sorted candidate array, for compact packed keys)
             j = np.searchsorted(cand, drep)
@@ -890,12 +902,11 @@ class SearchEngine:
         # block-max branches.  Over-cap hot terms still take block-max
         # (the LRU never holds them: partial decodes are not cacheable),
         # where the stats LRU covers the repeat cost instead.
-        # _BLOCKMAX_WARM_FALLBACK=False keeps forced-route strategy
-        # fixtures actually exercising block-max on repeat queries.
-        lru_warm = (self._BLOCKMAX_WARM_FALLBACK
-                    and sum(df_by_key) <= self._DRIVER_SCORE_MAX_POSTINGS
+        # Forced-route strategy fixtures keep block-max engaged on repeat
+        # queries by giving the term LRU a zero budget.
+        lru_warm = (sum(df_by_key) <= self._DRIVER_SCORE_MAX_POSTINGS
                     and all(not df_by_key[i]
-                            or self._lru_get(keys[i]) is not None
+                            or self._term_lru.get(keys[i]) is not None
                             for i in range(len(keys))))
         if (not lru_warm and k and len(keys) == 1 and len(q.terms) == 1
                 and q.op in ("and", "or")
@@ -905,9 +916,10 @@ class SearchEngine:
             # STATS only, then decode blocks in upper-bound order until
             # the k-th score beats every unread block's bound.  At 10^12
             # turns a stopword's top-10 stops being a full postings
-            # decode: bytes read ∝ the few bound-competitive blocks.
-            hits = self._driver_single_term_blockmax(
-                keys[0], df_by_key[0], k, skip)
+            # decode: bytes read ∝ the few bound-competitive blocks.  One
+            # term is a flat OR of itself (its own anchor), whichever op
+            # it carries.
+            hits = self._driver_flat_blockmax(q.terms, dfm, k, skip)
             if hits is not None:
                 return hits
         # a SIMPLE flat NOT clause (op "not", no nesting) rides the
@@ -933,7 +945,7 @@ class SearchEngine:
             # multi-term block-max decode applies
             # (see _driver_flat_blockmax).  A single matched term with a
             # NOT clause takes the same route (the no-NOT single-term
-            # case kept its own path above).
+            # case took it above, behind the lower single-term gate).
             #
             # An or_q CHAIN flattens exactly when every chain clause
             # carries at most ONE matched term: such a clause's result
@@ -1013,8 +1025,6 @@ class SearchEngine:
             return []
         import numpy as np
 
-        from resin_spark.postings import decode_counts, decode_doc_ids
-
         empty64 = np.empty(0, dtype=np.int64)
         # warm terms come straight off the decoded-postings LRU; only
         # cache misses (with df > 0) are read
@@ -1023,7 +1033,7 @@ class SearchEngine:
         for key, i in idx.items():
             if not df_by_key[i]:
                 continue
-            got = self._lru_get(key)
+            got = self._term_lru.get(key)
             if got is not None:
                 cached[i] = got
             else:
@@ -1043,15 +1053,13 @@ class SearchEngine:
                     ],
                 )
                 rows = self.postings().filter(pred).select(*cols).collect()
-        # per-key sorted-unique (doc_id, tf, dl) arrays; mirrors the mask
-        # agg (sum tf, max dl — surface mode has one row per (doc, key),
-        # so both are identity).  All O(Σdf), no nkeys×ndocs dense state.
+        # per-key sorted-unique (doc_id, tf, dl) arrays, the mask agg's
+        # (sum tf, max dl).  All O(Σdf), no nkeys×ndocs dense state.
         bufs: list[list] = [[] for _ in keys]
         for r in rows:
             i = idx.get((r["field"], r["term"]))
             if i is not None:
-                bufs[i].append((bytes(r["doc_ids_bin"]), bytes(r["tfs_bin"]),
-                                bytes(r["dls_bin"])))
+                bufs[i].append(r)
         uid_k, tf_k, dl_k = [], [], []
         for i, blist in enumerate(bufs):
             if i in cached:
@@ -1059,15 +1067,8 @@ class SearchEngine:
             elif not blist:
                 uid, tf, dl = empty64, empty64, empty64
             else:
-                ids = np.concatenate([decode_doc_ids(b) for b, _, _ in blist])
-                tfs = np.concatenate([decode_counts(b) for _, b, _ in blist])
-                dls = np.concatenate([decode_counts(b) for _, _, b in blist])
-                uid, inv = np.unique(ids, return_inverse=True)
-                tf = np.zeros(len(uid), dtype=np.int64)
-                np.add.at(tf, inv, tfs)
-                dl = np.zeros(len(uid), dtype=np.int64)
-                np.maximum.at(dl, inv, dls)
-                self._lru_put(keys[i], (uid, tf, dl))
+                uid, tf, dl = _decode_merged(blist)
+                self._term_lru.put(keys[i], (uid, tf, dl))
             uid_k.append(uid)
             tf_k.append(tf)
             dl_k.append(dl)
@@ -1087,33 +1088,17 @@ class SearchEngine:
                                         uid_k, tf_k, dl_k, idx, df_by_key,
                                         k, skip)
 
-    # Block-max single-term top-k (the 100 TB hot-term path): a query
-    # for one hot term does not need the term's full postings — each
-    # posting block already carries (max_tf, min_dl) stats (build.py),
-    # which bound the best BM25 score any of its docs can reach (score
-    # is monotone up in tf, down in dl; float64 rounding is monotone, so
-    # the bound evaluated with the same op tree is a true upper bound).
-    # Blocks decode in (bound desc, block_id asc) order; iteration stops
-    # when the running k-th hit beats every unread block's bound.  The
-    # block_id-asc secondary order makes ties terminate too: block_id is
-    # monotone in doc_id (build.py:490), so once the k-th hit's score
-    # EQUALS the next bound and the next block's doc range lies past the
-    # k-th doc_id, no unread doc can displace it under the (score desc,
-    # doc_id asc) final order.  This is the Block-Max WAND bound of
-    # wand.py applied to the embedded driver path, where the single-term
-    # shape makes it exact with no pivot bookkeeping.  Engages above
-    # _BLOCKMAX_MIN_POSTINGS; below it the standard decode-once path is
-    # cheaper END TO END — its cost is one pushed scan plus a decode
-    # bounded by df itself (corpus-size-independent), while block-max
-    # pays a stats read plus several chunked scans whose per-scan fixed
-    # cost grows with the dataset (measured at the 6M tier: a 360k-df
-    # term took 1.45 s cold / 1.54 s warm via 14-block block-max vs
-    # 0.66 / 0.34 s standard, while the 1.8M-df hot term took 0.44 s
-    # via 2-block block-max vs 1.95 s standard — pruning must be strong
-    # for block-max to win, and a lone term needs high df for its bound
-    # variance to prune hard).  Bails to the standard paths (None) if
-    # termination
-    # hasn't happened by _DRIVER_SCORE_MAX_POSTINGS decoded occurrences.
+    # hot single-term gate of the block-max decode (_driver_flat_blockmax
+    # with the term as its own anchor).  Below it the standard
+    # decode-once path is cheaper END TO END — its cost is one pushed
+    # scan plus a decode bounded by df itself (corpus-size-independent),
+    # while block-max pays a stats read plus several chunked scans whose
+    # per-scan fixed cost grows with the dataset (measured at the 6M
+    # tier: a 360k-df term took 1.45 s cold / 1.54 s warm via 14-block
+    # block-max vs 0.66 / 0.34 s standard, while the 1.8M-df hot term
+    # took 0.44 s via 2-block block-max vs 1.95 s standard — pruning must
+    # be strong for block-max to win, and a lone term needs high df for
+    # its bound variance to prune hard).
     _BLOCKMAX_MIN_POSTINGS = 500_000
     # chunk growth 2 -> 4 -> 8 -> ... -> cap: top-k usually terminates
     # within the first chunks (one block holds thousands of postings), so
@@ -1139,10 +1124,6 @@ class SearchEngine:
     # term's bound variance makes its pruning reliably strong (measured
     # 2/226 blocks at the 6M tier vs a 1.95 s full decode)
     _BLOCKMAX_FLAT_MIN_POSTINGS = 2_000_000
-    # allow the lru_warm fast path (repeat queries whose keys are all
-    # term-LRU-cached skip block-max for the in-memory fold); strategy
-    # fixtures set this False so forced block-max routes stay forced
-    _BLOCKMAX_WARM_FALLBACK = True
     # driver bound on the STATS read (3 int64 columns): ~24 B/row.  A
     # term spanning more blocks than this (a stopword at ~10^11+ turns)
     # falls back to the distributed fold / WAND path
@@ -1176,8 +1157,7 @@ class SearchEngine:
         SessionFactory.cs:396-403).  Caller must have checked that the
         embedded postings dataset exists."""
         if key in self._stats_lru:
-            self._stats_lru.move_to_end(key)
-            return self._stats_lru[key]
+            return self._stats_lru.get(key)
         self.stats_lru_misses += 1
         import numpy as np
         import pyarrow.dataset as pads
@@ -1198,133 +1178,8 @@ class SearchEngine:
                             dtype=np.int64)
             np.minimum.at(ub_dl, inv, tbl.column("min_dl").to_numpy())
             res = (bids, ub_tf, ub_dl, raw)
-        n = 0 if res is None else len(res[0])
-        if n <= self._STATS_LRU_MAX_BLOCKS:
-            self._stats_lru[key] = res
-            self._stats_lru_blocks += n
-            while self._stats_lru_blocks > self._STATS_LRU_MAX_BLOCKS:
-                _, ev = self._stats_lru.popitem(last=False)
-                if ev is not None:
-                    self._stats_lru_blocks -= len(ev[0])
+        self._stats_lru.put(key, res)
         return res
-
-    def _driver_single_term_blockmax(
-            self, key: tuple[str, str], df: int, k: int,
-            skip: int) -> "list[tuple[int, float]] | None":
-        import numpy as np
-
-        from resin_spark.build import BLOCK_SHIFT
-        from resin_spark.postings import decode_counts, decode_doc_ids
-
-        f, tok = key
-        if self._pa_dataset("postings") is None:
-            return None  # stats-only read needs the embedded dataset
-        st = self.stats().get(f)
-        if st is None or not st["n_docs"]:
-            return []
-        import pyarrow.dataset as pads
-
-        self._evict_persisted()
-        term_f = (pads.field("field") == f) & (pads.field("term") == tok)
-        got = self._block_stats(key)
-        if got is None:
-            return None
-        bids, ub_tf, ub_dl, _raw = got
-        if not len(bids):
-            return []
-        idf = self.idf(st["n_docs"], df)
-        avgdl = st["avgdl"]
-        one_minus_b = 1.0 - BB
-        # EXACT score op tree of _score_mask_classes, fed the bound inputs
-        ub = idf * (ub_tf / (ub_tf + K1 * (one_minus_b
-                                           + BB * ub_dl / avgdl)))
-        order = np.lexsort((bids, -ub))
-        need = skip + k
-        cand_ids = np.empty(0, dtype=np.int64)
-        cand_scores = np.empty(0, dtype=np.float64)
-        full_chunks: list[tuple] = []  # decoded (uid, tf, dl) per chunk
-        decoded = 0
-        scanned_blocks = 0
-        pos = 0
-        chunk_n = self._BLOCKMAX_CHUNK_START
-        while pos < len(order):
-            chunk = order[pos:pos + chunk_n]
-            pos += len(chunk)
-            chunk_n = min(chunk_n * 2, self._BLOCKMAX_CHUNK_MAX)
-            scanned_blocks += len(chunk)
-            chunk_bids = [int(bids[c]) for c in chunk]
-            rows = self._pa_postings_rows(
-                term_f & pads.field("block_id").isin(chunk_bids),
-                ("df_block", "doc_ids_bin", "tfs_bin", "dls_bin"))
-            if rows is None:
-                return None
-            decoded += sum(r["df_block"] for r in rows)
-            if rows:
-                ids = np.concatenate(
-                    [decode_doc_ids(bytes(r["doc_ids_bin"])) for r in rows])
-                tfs = np.concatenate(
-                    [decode_counts(bytes(r["tfs_bin"])) for r in rows])
-                dls = np.concatenate(
-                    [decode_counts(bytes(r["dls_bin"])) for r in rows])
-                uid, inv = np.unique(ids, return_inverse=True)
-                tf = np.zeros(len(uid), dtype=np.int64)
-                np.add.at(tf, inv, tfs)
-                dl = np.zeros(len(uid), dtype=np.int64)
-                np.maximum.at(dl, inv, dls)
-                w = idf * (tf / (tf + K1 * (one_minus_b
-                                            + BB * dl / avgdl)))
-                cand_ids = np.concatenate([cand_ids, uid])
-                cand_scores = np.concatenate([cand_scores, w])
-                full_chunks.append((uid, tf, dl))
-            if len(cand_ids) >= need:
-                top = np.lexsort((cand_ids, -cand_scores))[:need]
-                cand_ids, cand_scores = cand_ids[top], cand_scores[top]
-                kth_score = float(cand_scores[-1])
-                kth_doc = int(cand_ids[-1])
-                if pos >= len(order):
-                    break
-                nxt = order[pos]
-                nxt_ub = float(ub[nxt])
-                if nxt_ub < kth_score:
-                    break
-                if (nxt_ub == kth_score
-                        and int(bids[nxt]) > (kth_doc >> BLOCK_SHIFT)):
-                    # equal-bound blocks arrive in block_id order; all
-                    # remaining equal-bound docs have doc_id past the
-                    # k-th hit, and lower-bound blocks can't tie at all
-                    break
-            if decoded > self._BLOCKMAX_DECODE_MAX:
-                return None  # degenerate bounds: no early termination
-            if scanned_blocks >= self._BLOCKMAX_BULK_AFTER:
-                # the bounds aren't pruning — each chunk fetch re-scans
-                # the dataset, so stop doubling and take the rest in
-                # slab-sized fetches (one or two more scans instead of
-                # log2 more); the stop test and decode bail still apply
-                chunk_n = self._BLOCKMAX_BULK_SLAB
-        if scanned_blocks == len(order):
-            # every block decoded — a FULL decode, so the merged arrays
-            # are exactly what the standard path would have produced and
-            # may enter the term LRU (partial decodes never do); blocks
-            # partition the doc space, so cross-chunk docs are disjoint
-            # and a sort completes the merge.  The repeat query then
-            # takes the lru_warm fast path instead of re-reading blocks.
-            uid = np.concatenate([c[0] for c in full_chunks]) \
-                if full_chunks else np.empty(0, dtype=np.int64)
-            srt = np.argsort(uid, kind="stable")
-            self._lru_put(key, (
-                uid[srt],
-                np.concatenate([c[1] for c in full_chunks])[srt]
-                if full_chunks else np.empty(0, dtype=np.int64),
-                np.concatenate([c[2] for c in full_chunks])[srt]
-                if full_chunks else np.empty(0, dtype=np.int64),
-            ))
-        self.last_blockmax_stats = {
-            "blocks_total": int(len(bids)),
-            "blocks_scored": int(scanned_blocks),
-            "postings_decoded": int(decoded),
-        }
-        top = np.lexsort((cand_ids, -cand_scores))[skip:need]
-        return [(int(cand_ids[t]), float(cand_scores[t])) for t in top]
 
     def _driver_flat_blockmax(
             self, matched: list, dfm: dict, k: int, skip: int,
@@ -1332,7 +1187,15 @@ class SearchEngine:
             negs: "list[tuple[str, str]] | None" = None,
     ) -> "list[tuple[int, float]] | None":
         """Flat-OR / flat-AND top-k with block-max early termination
-        (the 100 TB multi-term paths).
+        (the 100 TB hot-term and multi-term paths).  A single term is a
+        flat OR with itself as the anchor.
+
+        Each posting block carries (max_tf, min_dl) stats (build.py)
+        that bound the best BM25 score any of its docs can reach: the
+        score is monotone up in tf and down in dl, and float64 rounding
+        is monotone, so the bound evaluated with the scorer's op tree is
+        a true upper bound.  This is the Block-Max WAND bound of wand.py
+        applied to the embedded driver path.
 
         OR: Resin's OR merge is order-sensitive (Reducer.cs:86-149) —
         docs enter the result ONLY from the first matched term; later OR
@@ -1344,8 +1207,7 @@ class SearchEngine:
         term's contribution to a candidate lives in the SAME block —
         decoding a candidate block with all terms restricted to its
         block_id yields each doc's EXACT final score, so Block-Max WAND
-        degenerates to ordered block decode with no pivot bookkeeping,
-        exactly like the single-term path.
+        degenerates to ordered block decode with no pivot bookkeeping.
 
         Exactness of the bound: the scorer folds per-term weights
         left-associatively in matched-term order, skipping terms a doc
@@ -1354,10 +1216,17 @@ class SearchEngine:
         (max_tf, min_dl) bound weights: IEEE rounding is monotone, so a
         fold of bounds >= a fold of true weights in the same order, and
         skipping a (non-negative) term only lowers the doc's fold.
-        Termination + tie rules are _driver_single_term_blockmax's:
-        stop when the k-th hit beats every unread bound; equal bounds
-        terminate once the next block's doc range lies past the k-th
-        doc_id (block decode order is bound desc, block_id asc).
+
+        Termination: blocks decode in (bound desc, block_id asc) order,
+        in chunks that double from _BLOCKMAX_CHUNK_START, and iteration
+        stops once the running k-th hit beats every unread block's
+        bound.  Ties terminate too: block_id is monotone in doc_id
+        (build.py), so once the k-th hit's score EQUALS the next bound
+        and the next block's doc range lies past the k-th doc_id, no
+        unread doc can displace it under the (score desc, doc_id asc)
+        final order.  Returns None (the standard strategies run) when
+        termination has not happened by _BLOCKMAX_DECODE_MAX decoded
+        postings — degenerate bounds that do not prune.
 
         AND additionally inherits the Reducer empty-accumulator quirk
         guard of _driver_and_hits: a NONEMPTY candidate set proves every
@@ -1384,8 +1253,8 @@ class SearchEngine:
         the seed-capped pruned path refuses."""
         import numpy as np
 
+        from resin_spark import postings as P
         from resin_spark.build import BLOCK_SHIFT
-        from resin_spark.postings import decode_counts, decode_doc_ids
 
         if self._pa_dataset("postings") is None:
             return None
@@ -1421,7 +1290,7 @@ class SearchEngine:
         pos_keys = set(keys)
         neg_keys = set(negs)
         # per-key per-block bound inputs (merged over segment rows: tf
-        # sums, dl mins — same merge as the single-term path); one
+        # sums, dl mins — _block_stats); one
         # pushed stats read per key (LRU-cached, _block_stats) keeps the
         # columns numeric (no 8M-row string materialization)
         one_minus_b = 1.0 - BB
@@ -1496,7 +1365,7 @@ class SearchEngine:
                 decoded += sum(r["df_block"] for r in nrows)
                 if nrows:
                     neg_union = np.unique(np.concatenate(
-                        [decode_doc_ids(bytes(r["doc_ids_bin"]))
+                        [P.decode_doc_ids(bytes(r["doc_ids_bin"]))
                          for r in nrows]))
             bufs: dict[tuple, list] = {}
             for r in rows:
@@ -1504,18 +1373,7 @@ class SearchEngine:
                     bufs.setdefault((r["field"], r["term"]), []).append(r)
             dec: dict[tuple, tuple] = {}
             for key, blist in bufs.items():
-                ids = np.concatenate(
-                    [decode_doc_ids(bytes(r["doc_ids_bin"]))
-                     for r in blist])
-                tfs = np.concatenate(
-                    [decode_counts(bytes(r["tfs_bin"])) for r in blist])
-                dls = np.concatenate(
-                    [decode_counts(bytes(r["dls_bin"])) for r in blist])
-                uid, inv = np.unique(ids, return_inverse=True)
-                tf = np.zeros(len(uid), dtype=np.int64)
-                np.add.at(tf, inv, tfs)
-                dl = np.zeros(len(uid), dtype=np.int64)
-                np.maximum.at(dl, inv, dls)
+                uid, tf, dl = _decode_merged(blist)
                 w = idf_of[key] * (tf / (tf + K1 * (
                     one_minus_b + BB * dl / avgdl_of[key])))
                 dec[key] = (uid, w)
@@ -1569,8 +1427,10 @@ class SearchEngine:
             if decoded > self._BLOCKMAX_DECODE_MAX:
                 return None  # degenerate bounds: no early termination
             if scanned_blocks >= self._BLOCKMAX_BULK_AFTER:
-                # no pruning — slab fetches instead of doubled chunks
-                # (see the single-term path)
+                # the bounds aren't pruning — each chunk fetch re-scans
+                # the dataset, so stop doubling and take the rest in
+                # slab-sized fetches (one or two more scans instead of
+                # log2 more); the stop test and decode bail still apply
                 chunk_n = self._BLOCKMAX_BULK_SLAB
         if mode == "and" and not len(cand_ids) and not pos_any:
             # empty POSITIVE intersection: a fold prefix may have been
@@ -1582,9 +1442,12 @@ class SearchEngine:
             return None
         if scanned_blocks == len(order):
             # every candidate block decoded: any key whose OWN block set
-            # lies inside the candidate set got a FULL decode (see the
-            # single-term path) — cache those in the term LRU so the
-            # repeat query can take the lru_warm fast path.  Keys with
+            # lies inside the candidate set got a FULL decode: its merged
+            # arrays are exactly what the standard path would produce
+            # (blocks partition the doc space, so cross-chunk docs are
+            # disjoint and a sort completes the merge) — cache those in
+            # the term LRU so the repeat query can take the lru_warm
+            # fast path.  Keys with
             # blocks outside the candidate set (an OR boost term wider
             # than its anchor, an AND term wider than the intersection)
             # stay uncached: partial decodes never enter the LRU.
@@ -1594,7 +1457,7 @@ class SearchEngine:
                                        assume_unique=True).all():
                     uid_f = np.concatenate([c[0] for c in chunks])
                     srt = np.argsort(uid_f, kind="stable")
-                    self._lru_put(key, (
+                    self._term_lru.put(key, (
                         uid_f[srt],
                         np.concatenate([c[1] for c in chunks])[srt],
                         np.concatenate([c[2] for c in chunks])[srt],
@@ -1625,11 +1488,6 @@ class SearchEngine:
     _AND_SEED_MAX_POSTINGS = 500_000
     _AND_BLOCK_IN_MAX = 8192
     _AND_COLLECT_MAX_POSTINGS = 4_000_000
-    # serve block-restricted collects from the term LRU (see
-    # _collect_key_postings).  Forced-route test fixtures set this False
-    # so the and_pruned strategy keeps exercising the restricted read
-    # even on a warm shared engine.
-    _AND_LRU_SERVE = True
 
     @staticmethod
     def _flat_not(nq: Query) -> bool:
@@ -1664,11 +1522,8 @@ class SearchEngine:
         is not bypassed."""
         import numpy as np
 
-        from resin_spark.postings import decode_counts, decode_doc_ids
-
         f, tok = key
-        got = (self._lru_get(key)
-               if blocks is None or self._AND_LRU_SERVE else None)
+        got = self._term_lru.get(key)
         if got is not None:
             # NOTE: on an lru_hit, postings_collected is the CACHED
             # full-term unique-doc count (nothing was read), not what a
@@ -1704,14 +1559,7 @@ class SearchEngine:
         if not rows:
             e = np.empty(0, dtype=np.int64)
             return e, e, e
-        ids = np.concatenate([decode_doc_ids(bytes(r["doc_ids_bin"])) for r in rows])
-        tfs = np.concatenate([decode_counts(bytes(r["tfs_bin"])) for r in rows])
-        dls = np.concatenate([decode_counts(bytes(r["dls_bin"])) for r in rows])
-        uid, inv = np.unique(ids, return_inverse=True)
-        tf = np.zeros(len(uid), dtype=np.int64)
-        np.add.at(tf, inv, tfs)
-        dl = np.zeros(len(uid), dtype=np.int64)
-        np.maximum.at(dl, inv, dls)
+        uid, tf, dl = _decode_merged(rows)
         if blocks is None or (total_df is not None
                               and n_postings == total_df):
             # full-term reads are cacheable — including a RESTRICTED read
@@ -1720,7 +1568,7 @@ class SearchEngine:
             # the same Σ df_block quantity, so equality is exact).  A
             # genuinely partial collect stays uncached: it is specific to
             # one query's intersection.
-            self._lru_put(key, (uid, tf, dl))
+            self._term_lru.put(key, (uid, tf, dl))
         return uid, tf, dl
 
     def _driver_and_hits(self, q: Query, keys: list, idx: dict,
@@ -2359,17 +2207,15 @@ class SearchEngine:
         self._cached.clear()
 
     def clear_cache(self) -> None:
-        """Full reset: persisted RDDs AND the decoded-postings LRU.
+        """Full reset: persisted RDDs AND the term, block-stats and
+        positional LRUs.
         Benchmarks call this between trials so a timed query never hits
         the warm term cache; long-lived sessions keep the LRU across
         queries (the reference's cached-ColumnReader behavior)."""
         self._evict_persisted()
         self._term_lru.clear()
-        self._term_lru_postings = 0
         self._stats_lru.clear()
-        self._stats_lru_blocks = 0
         self._pos_lru.clear()
-        self._pos_lru_occ = 0
 
 
 def multi_search(

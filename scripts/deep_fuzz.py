@@ -58,29 +58,34 @@ def _rand_clause(rng: random.Random, depth: int) -> dict:
     return clause
 
 
+_OVERRIDES = {
+    "distributed": {"_DRIVER_SCORE_MAX_POSTINGS": -1},
+    "and_pruned": {"_DRIVER_SCORE_MAX_POSTINGS": 0},
+    "blockmax": {"_BLOCKMAX_MIN_POSTINGS": 0,
+                 "_BLOCKMAX_FLAT_MIN_POSTINGS": 0},
+    "and_blockmax": {"_DRIVER_SCORE_MAX_POSTINGS": 0,
+                     "_AND_SEED_MAX_POSTINGS": 0},
+}
+
+
 def _set_strategy(engine, name: str):
-    """Mirror tests/conftest.engine_s: force one physical route."""
-    if name == "blockmax":
-        engine._BLOCKMAX_MIN_POSTINGS = 0
-        engine._BLOCKMAX_FLAT_MIN_POSTINGS = 0
-        engine._BLOCKMAX_WARM_FALLBACK = False
-    elif name == "and_blockmax":
-        engine._DRIVER_SCORE_MAX_POSTINGS = 0
-        engine._AND_SEED_MAX_POSTINGS = 0
-    elif name == "distributed":
-        engine._DRIVER_SCORE_MAX_POSTINGS = -1
-    elif name == "and_pruned":
-        engine._DRIVER_SCORE_MAX_POSTINGS = 0
-    elif name == "driver_sparkio":
+    """Mirror tests/conftest.engine_s: force one physical route.
+    'blockmax' and 'and_pruned' empty the term LRU and give it a zero
+    budget, so warm state can neither divert block-max to the lru_warm
+    in-memory fold nor serve the pruned AND's restricted reads."""
+    engine.__dict__.update(_OVERRIDES.get(name, {}))
+    if name == "driver_sparkio":
         engine.io_mode = "spark"
+    if name in ("blockmax", "and_pruned"):
+        engine._term_lru.clear()
+        engine._term_lru.budget = 0
 
 
 def _clear_strategy(engine, name: str):
-    for attr in ("_BLOCKMAX_MIN_POSTINGS", "_BLOCKMAX_FLAT_MIN_POSTINGS",
-                 "_BLOCKMAX_WARM_FALLBACK", "_DRIVER_SCORE_MAX_POSTINGS",
-                 "_AND_SEED_MAX_POSTINGS"):
-        engine.__dict__.pop(attr, None)
+    for attr in _OVERRIDES.get(name, {}):
+        del engine.__dict__[attr]
     engine.io_mode = "auto"
+    engine._term_lru.budget = engine._TERM_LRU_MAX_POSTINGS
 
 
 def main() -> int:

@@ -79,43 +79,30 @@ def engine_s(request, engine):
     eligible single-positive-term or flat-OR query runs the block-max
     early-termination decode), and 'and_blockmax' (Σdf cap 0 + seed cap
     0, so every pure-AND query runs the flat-AND block-max decode).
-    Rank-identity suites run under all six so no strategy loses oracle
-    coverage."""
-    cap = {"distributed": -1, "and_pruned": 0}.get(request.param)
-    if request.param == "blockmax":
-        engine._BLOCKMAX_MIN_POSTINGS = 0
-        engine._BLOCKMAX_FLAT_MIN_POSTINGS = 0
-        engine._BLOCKMAX_WARM_FALLBACK = False
-        try:
-            yield engine
-        finally:
-            del engine.__dict__["_BLOCKMAX_MIN_POSTINGS"]
-            del engine.__dict__["_BLOCKMAX_FLAT_MIN_POSTINGS"]
-            del engine.__dict__["_BLOCKMAX_WARM_FALLBACK"]
-    elif request.param == "and_blockmax":
-        engine._DRIVER_SCORE_MAX_POSTINGS = 0
-        engine._AND_SEED_MAX_POSTINGS = 0
-        try:
-            yield engine
-        finally:
-            del engine.__dict__["_DRIVER_SCORE_MAX_POSTINGS"]
-            del engine.__dict__["_AND_SEED_MAX_POSTINGS"]
-    elif request.param == "driver_sparkio":
-        prev = engine.io_mode
+    'blockmax' and 'and_pruned' also empty the term LRU and give it a
+    zero budget, so a warm shared engine can neither take the lru_warm
+    in-memory fold instead of block-max nor serve the pruned AND's
+    restricted reads from the cache.  Rank-identity suites run under all
+    six so no strategy loses oracle coverage."""
+    overrides = {
+        "distributed": {"_DRIVER_SCORE_MAX_POSTINGS": -1},
+        "and_pruned": {"_DRIVER_SCORE_MAX_POSTINGS": 0},
+        "blockmax": {"_BLOCKMAX_MIN_POSTINGS": 0,
+                     "_BLOCKMAX_FLAT_MIN_POSTINGS": 0},
+        "and_blockmax": {"_DRIVER_SCORE_MAX_POSTINGS": 0,
+                         "_AND_SEED_MAX_POSTINGS": 0},
+    }.get(request.param, {})
+    engine.__dict__.update(overrides)
+    prev_io = engine.io_mode
+    if request.param == "driver_sparkio":
         engine.io_mode = "spark"
-        try:
-            yield engine
-        finally:
-            engine.io_mode = prev
-    elif cap is not None:
-        engine._DRIVER_SCORE_MAX_POSTINGS = cap
-        # and_pruned must keep exercising the restricted READ even when
-        # the shared engine's term LRU is warm from earlier strategies
-        engine._AND_LRU_SERVE = False
-        try:
-            yield engine
-        finally:
-            del engine.__dict__["_DRIVER_SCORE_MAX_POSTINGS"]
-            engine.__dict__.pop("_AND_LRU_SERVE", None)
-    else:
+    if request.param in ("blockmax", "and_pruned"):
+        engine._term_lru.clear()
+        engine._term_lru.budget = 0
+    try:
         yield engine
+    finally:
+        for attr in overrides:
+            del engine.__dict__[attr]
+        engine.io_mode = prev_io
+        engine._term_lru.budget = engine._TERM_LRU_MAX_POSTINGS

@@ -161,19 +161,41 @@ def test_term_lru_repeat_query_skips_postings_read(engine, monkeypatch):
 
 
 def test_term_lru_eviction_bound(engine):
+    """The bounded LRU behind the term, stats and positional caches:
+    evicts least-recently-used entries past its budget, drops a value
+    bigger than the whole budget, stores nothing at a zero budget,
+    caches a None (the stats LRU's bail marker) at size 0, and
+    clear_cache() empties it."""
     import numpy as np
 
+    from resin_spark.executor import _BoundedLRU
+
     engine.clear_cache()
+    lru = engine._term_lru
     one = np.ones(1, dtype=np.int64)
     cap = engine._TERM_LRU_MAX_POSTINGS
+    assert lru.budget == cap
     big = np.ones(cap // 2 + 1, dtype=np.int64)
-    engine._lru_put(("text", "a"), (big, big, big))
-    engine._lru_put(("text", "b"), (big, big, big))  # evicts 'a'
-    assert ("text", "a") not in engine._term_lru
-    engine._lru_put(("text", "c"), (one, one, one))
-    assert engine._term_lru_postings <= cap
+    lru.put(("text", "a"), (big, big, big))
+    lru.put(("text", "b"), (big, big, big))  # evicts 'a'
+    assert ("text", "a") not in lru
+    lru.put(("text", "c"), (one, one, one))
+    assert lru.used <= cap
     over = np.ones(cap + 1, dtype=np.int64)
-    engine._lru_put(("text", "d"), (over, over, over))  # too big: ignored
-    assert ("text", "d") not in engine._term_lru
+    lru.put(("text", "d"), (over, over, over))  # too big: ignored
+    assert ("text", "d") not in lru
     engine.clear_cache()
-    assert engine._term_lru_postings == 0 and not engine._term_lru
+    assert lru.used == 0 and not lru
+
+    zero = _BoundedLRU(0)
+    zero.put("k", (one,))
+    assert "k" not in zero and len(zero) == 0 and zero.used == 0
+
+    stats = _BoundedLRU(8)
+    stats.put("bail", None)
+    assert "bail" in stats and stats.get("bail") is None
+    assert stats.used == 0
+    stats.put("x", (np.ones(3, dtype=np.int64),))
+    assert stats.used == 3
+    stats.clear()
+    assert stats.used == 0 and "bail" not in stats

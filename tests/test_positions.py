@@ -130,18 +130,20 @@ def test_positions_codec_property():
 @pytest.fixture(params=["driver", "driver_sparkio", "distributed"])
 def pos_engine_s(request, pos_engine):
     """Positional engine under the driver-scored (embedded pyarrow),
-    driver-through-Spark-collect, and distributed-verify strategies."""
+    driver-through-Spark-collect, and distributed-verify strategies.
+    'driver_sparkio' empties the positional LRU and gives it a zero
+    budget, so the Spark read actually runs even when the shared engine
+    is warm from the driver-strategy pass."""
     if request.param == "driver_sparkio":
         prev = pos_engine.io_mode
         pos_engine.io_mode = "spark"
-        # the Spark read must actually run even when the shared engine's
-        # positional LRU is warm from the driver-strategy pass
-        pos_engine._POS_LRU_SERVE = False
+        pos_engine._pos_lru.clear()
+        pos_engine._pos_lru.budget = 0
         try:
             yield pos_engine
         finally:
             pos_engine.io_mode = prev
-            pos_engine.__dict__.pop("_POS_LRU_SERVE", None)
+            pos_engine._pos_lru.budget = pos_engine._POS_LRU_MAX_OCC
     elif request.param == "distributed":
         pos_engine._DRIVER_SCORE_MAX_POSTINGS = -1
         try:
@@ -485,7 +487,7 @@ def test_phrase_positional_lru_warm_repeat(spark, pos_engine):
         # stale positional decode must not survive an append
         assert pos_engine._pos_lru
         pos_engine.refresh()
-        assert not pos_engine._pos_lru and pos_engine._pos_lru_occ == 0
+        assert not pos_engine._pos_lru and pos_engine._pos_lru.used == 0
     finally:
         del pos_engine._pa_postings_rows
         pos_engine.clear_cache()

@@ -95,18 +95,22 @@ def test_wand_prunes_on_zipf_corpus(spark, tmp_path):
     # block-max SINGLE-term driver path on the same corpus: blocks decode
     # in upper-bound order (the bursty tf=6 early-conv blocks first) and
     # iteration stops once the k-th hit beats every unread bound — hits
-    # identical to the full-decode engine, most blocks never read
+    # identical to the full-decode engine, most blocks never read.  A
+    # lone term takes the path whichever op it carries.
     bm = SearchEngine(spark, root, fields=("text",))
     bm._BLOCKMAX_MIN_POSTINGS = 0
     bm._BLOCKMAX_FLAT_MIN_POSTINGS = 0
-    bm._BLOCKMAX_WARM_FALLBACK = False  # keep the forced route forced
-    for skip in (0, 5):
-        got_bm = bm.topk({"or": {"text": "wandhot"}}, k=10, skip=skip)
-        want_bm = base.topk({"or": {"text": "wandhot"}}, k=10, skip=skip)
-        assert got_bm == want_bm, skip
-    stb = bm.last_blockmax_stats
-    assert stb is not None and stb["blocks_total"] >= 16
-    assert stb["blocks_scored"] < 0.5 * stb["blocks_total"], stb
+    bm._term_lru.budget = 0  # no lru_warm repeat: keep the route forced
+    for op in ("and", "or"):
+        for skip in (0, 5):
+            bm.last_blockmax_stats = None
+            got_bm = bm.topk({op: {"text": "wandhot"}}, k=10, skip=skip)
+            want_bm = base.topk({op: {"text": "wandhot"}}, k=10, skip=skip)
+            assert got_bm == want_bm, (op, skip)
+            stb = bm.last_blockmax_stats
+            assert stb is not None and stb["blocks_total"] >= 16, op
+            assert stb["blocks_scored"] < 0.5 * stb["blocks_total"], (
+                op, skip, stb)
     assert stb["postings_decoded"] < hot_df
 
     # flat-OR block-max driver path (multi-term): Resin's order-sensitive
@@ -114,7 +118,7 @@ def test_wand_prunes_on_zipf_corpus(spark, tmp_path):
     # set is anchor-sized.  (a) rare anchor OR hot term: only the rare
     # term's conv blocks are read — the hot term's postings outside them
     # never decode; (b) hot anchor OR warm term: bound-ordered decode
-    # early-terminates like the single-term path.  Hits identical to the
+    # early-terminates like the single hot term.  Hits identical to the
     # full-decode engine in both orders, including paging.
     bm.last_blockmax_stats = None
     for phrase in ("wandrare wandhot", "wandhot wandwarm"):
@@ -250,11 +254,10 @@ def test_blockmax_caches(spark, engine):
     stats scan; (2) a block-max run that decodes EVERY block is a FULL
     decode and feeds the term LRU with exactly the standard read path's
     merged arrays; (3) the repeat query then takes the lru_warm fast
-    path (in-memory fold — identical hits, no block re-read), unless
-    _BLOCKMAX_WARM_FALLBACK is off (the strategy-fixture form), which
-    keeps the route forced while the stats LRU still serves the bounds;
-    (4) clear_cache() restores cold behavior so bench cold trials stay
-    honest."""
+    path (in-memory fold — identical hits, no block re-read); once the
+    term LRU is emptied, block-max re-engages and the stats LRU still
+    serves its bounds (no new stats scan); (4) clear_cache() restores
+    cold behavior so bench cold trials stay honest."""
     from resin_spark.executor import SearchEngine
 
     engine.clear_cache()
@@ -268,7 +271,7 @@ def test_blockmax_caches(spark, engine):
         st = engine.last_blockmax_stats
         assert st is not None
         assert st["blocks_scored"] == st["blocks_total"]
-        got = engine._lru_get(("text", "banana"))
+        got = engine._term_lru.get(("text", "banana"))
         assert got is not None  # full decode entered the term LRU
         base = SearchEngine(spark, engine.root)
         ref = base._collect_key_postings(("text", "banana"), None)
@@ -279,8 +282,8 @@ def test_blockmax_caches(spark, engine):
         # warm repeat: lru_warm fast path — no block-max, no stats scan
         assert engine.last_blockmax_stats is None
         assert engine.stats_lru_misses == m1
-        # forced-route form: block-max re-engages, stats LRU serves it
-        engine._BLOCKMAX_WARM_FALLBACK = False
+        # term LRU emptied: block-max re-engages, stats LRU serves it
+        engine._term_lru.clear()
         assert engine.topk(q, k=1000) == h1
         assert engine.last_blockmax_stats is not None
         assert engine.stats_lru_misses == m1
@@ -299,7 +302,6 @@ def test_blockmax_caches(spark, engine):
     finally:
         del engine.__dict__["_BLOCKMAX_MIN_POSTINGS"]
         del engine.__dict__["_BLOCKMAX_FLAT_MIN_POSTINGS"]
-        engine.__dict__.pop("_BLOCKMAX_WARM_FALLBACK", None)
         engine.clear_cache()
 
 
