@@ -908,20 +908,6 @@ class SearchEngine:
                     and all(not df_by_key[i]
                             or self._term_lru.get(keys[i]) is not None
                             for i in range(len(keys))))
-        if (not lru_warm and k and len(keys) == 1 and len(q.terms) == 1
-                and q.op in ("and", "or")
-                and q.and_q is None and q.or_q is None and q.not_q is None
-                and df_by_key[0] > self._BLOCKMAX_MIN_POSTINGS):
-            # hot single term: block-max early termination — read block
-            # STATS only, then decode blocks in upper-bound order until
-            # the k-th score beats every unread block's bound.  At 10^12
-            # turns a stopword's top-10 stops being a full postings
-            # decode: bytes read ∝ the few bound-competitive blocks.  One
-            # term is a flat OR of itself (its own anchor), whichever op
-            # it carries.
-            hits = self._driver_flat_blockmax(q.terms, dfm, k, skip)
-            if hits is not None:
-                return hits
         # a SIMPLE flat NOT clause (op "not", no nesting) rides the
         # block-max paths for free: NOT is the LAST fold step
         # (and → or → not, Reducer.cs:72-83), subtracts the UNION of its
@@ -934,18 +920,24 @@ class SearchEngine:
                 negs = []
             elif self._flat_not(q.not_q):
                 negs = [(t.field, t.token) for t in q.not_q.terms]
+        # a lone term with no clause is a flat OR of itself (its own
+        # anchor), whichever op it carries, behind the lower single-term
+        # gate (see _BLOCKMAX_MIN_POSTINGS)
+        lone = len(q.terms) == 1 and q.or_q is None and q.not_q is None
         if (not lru_warm and k and q.terms and q.op in ("and", "or")
                 and q.and_q is None
-                and sum(df_by_key) > self._BLOCKMAX_FLAT_MIN_POSTINGS):
+                and sum(df_by_key) > (self._BLOCKMAX_MIN_POSTINGS if lone
+                                      else self._BLOCKMAX_FLAT_MIN_POSTINGS)):
             # flat OR (+ or_q chain): Resin's order-sensitive OR
             # (Reducer.cs:86-149) admits docs only from the FIRST
             # matched term — the OR merge adopts the incoming dict ONLY
             # on an empty accumulator and is boost-only otherwise — so
             # the candidate set is anchor-postings-sized and the
-            # multi-term block-max decode applies
-            # (see _driver_flat_blockmax).  A single matched term with a
-            # NOT clause takes the same route (the no-NOT single-term
-            # case took it above, behind the lower single-term gate).
+            # block-max decode applies (see _driver_flat_blockmax): read
+            # block STATS only, then decode blocks in upper-bound order
+            # until the k-th score beats every unread block's bound.  At
+            # 10^12 turns a stopword's top-10 stops being a full postings
+            # decode: bytes read ∝ the few bound-competitive blocks.
             #
             # An or_q CHAIN flattens exactly when every chain clause
             # carries at most ONE matched term: such a clause's result
@@ -984,12 +976,12 @@ class SearchEngine:
                          if dfm.get((t.field, t.token), 0) > 0])
             if (cnegs is not None and matched
                     and all(t.op == "or" for t in matched[1:n_top])
-                    and (len(matched) >= 2 or cnegs
+                    and (lone or len(matched) >= 2 or cnegs
                          or q.or_q is not None)):
-                # the last disjunct: a chain query with ONE matched term
-                # can't take the single-term branch above (its key count
-                # includes unmatched chain terms), so the flat path IS
-                # its block-max route
+                # ONE matched term takes this route when it is the whole
+                # query (lone), carries a flat NOT or sits in an or_q
+                # chain; one matched term among unmatched top-level
+                # terms stays off it
                 hits = self._driver_flat_blockmax(matched, dfm, k, skip,
                                                   "or", cnegs)
                 if hits is not None:

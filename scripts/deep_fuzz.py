@@ -27,6 +27,7 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tests"))
 
 from resin_spark.fixtures import (FILLER_WORDS, FRUIT_WORDS, WAND_TOKEN,
                                   WAND_TOKEN2, WAND_TOKEN3,
@@ -34,15 +35,13 @@ from resin_spark.fixtures import (FILLER_WORDS, FRUIT_WORDS, WAND_TOKEN,
 from resin_spark.reference import build_oracle_index, oracle_search
 from resin_spark.session import make_session
 from resin_spark.tokenizer import tokenize_py
+from strategies import forced_strategy
 
 VOCAB = (FRUIT_WORDS + FILLER_WORDS
          + [WAND_TOKEN, WAND_TOKEN2, WAND_TOKEN3,
             "user", "assistant", "tool",          # role values
             "zzznope", "qqnada"])                 # never occur
 FIELDS = ["text", "text", "text", "text", "role"]
-
-STRATEGIES = ("driver", "driver_sparkio", "distributed",
-              "and_pruned", "blockmax", "and_blockmax")
 
 
 def _rand_clause(rng: random.Random, depth: int) -> dict:
@@ -56,36 +55,6 @@ def _rand_clause(rng: random.Random, depth: int) -> dict:
         clause[rng.choice(["and", "or", "not"])] = _rand_clause(
             rng, depth - 1)
     return clause
-
-
-_OVERRIDES = {
-    "distributed": {"_DRIVER_SCORE_MAX_POSTINGS": -1},
-    "and_pruned": {"_DRIVER_SCORE_MAX_POSTINGS": 0},
-    "blockmax": {"_BLOCKMAX_MIN_POSTINGS": 0,
-                 "_BLOCKMAX_FLAT_MIN_POSTINGS": 0},
-    "and_blockmax": {"_DRIVER_SCORE_MAX_POSTINGS": 0,
-                     "_AND_SEED_MAX_POSTINGS": 0},
-}
-
-
-def _set_strategy(engine, name: str):
-    """Mirror tests/conftest.engine_s: force one physical route.
-    'blockmax' and 'and_pruned' empty the term LRU and give it a zero
-    budget, so warm state can neither divert block-max to the lru_warm
-    in-memory fold nor serve the pruned AND's restricted reads."""
-    engine.__dict__.update(_OVERRIDES.get(name, {}))
-    if name == "driver_sparkio":
-        engine.io_mode = "spark"
-    if name in ("blockmax", "and_pruned"):
-        engine._term_lru.clear()
-        engine._term_lru.budget = 0
-
-
-def _clear_strategy(engine, name: str):
-    for attr in _OVERRIDES.get(name, {}):
-        del engine.__dict__[attr]
-    engine.io_mode = "auto"
-    engine._term_lru.budget = engine._TERM_LRU_MAX_POSTINGS
 
 
 def main() -> int:
@@ -124,14 +93,11 @@ def main() -> int:
         strats = ["driver", "driver_sparkio"] + rng.sample(
             ["distributed", "and_pruned", "blockmax", "and_blockmax"], 2)
         for s in strats:
-            _set_strategy(engine, s)
-            try:
+            with forced_strategy(engine, s):
                 got = engine.topk(query, k=k, skip=skip)
                 repeat = rng.random() < 0.25  # warm/LRU second pass
                 if repeat:
                     got = engine.topk(query, k=k, skip=skip)
-            finally:
-                _clear_strategy(engine, s)
             ok = ([h[0] for h in got] == [h[0] for h in want]
                   and all(math.isclose(s1, s2, rel_tol=0, abs_tol=1e-9)
                           for (_, s1), (_, s2) in zip(got, want)))
@@ -168,12 +134,9 @@ def main() -> int:
                 want_keys.append(key)
         want_keys = want_keys[:10]
         for s in ("driver", rng.choice(["distributed", "driver_sparkio"])):
-            _set_strategy(engine, s)
-            try:
+            with forced_strategy(engine, s):
                 got = engine.phrase_search(
                     phrase, k=10, select=["conv_id", "turn_idx"]).collect()
-            finally:
-                _clear_strategy(engine, s)
             got_keys = [(r["conv_id"], r["turn_idx"]) for r in got]
             if got_keys != want_keys:
                 p_fail += 1

@@ -1,11 +1,15 @@
+import os
 import shutil
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+_TESTS = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(_TESTS))
+sys.path.insert(0, _TESTS)
 
 from pyspark.sql import SparkSession  # noqa: E402
+from strategies import STRATEGIES, forced_strategy  # noqa: E402
 
 
 @pytest.fixture(scope="session")
@@ -65,44 +69,10 @@ def engine(spark, index_root):
     return SearchEngine(spark, index_root)
 
 
-@pytest.fixture(params=["driver", "driver_sparkio", "distributed",
-                        "and_pruned", "blockmax", "and_blockmax"])
+@pytest.fixture(params=STRATEGIES)
 def engine_s(request, engine):
-    """The same engine under all physical strategies: 'driver' (the
-    size-gated driver-scored fast path with embedded pyarrow IO — the
-    default for a local root at fixture scale), 'driver_sparkio' (driver
-    scoring through Spark collects, the remote-root form), 'distributed'
-    (driver scoring disabled, so the distributed mask-class fold runs), and
-    'and_pruned' (Σdf cap 0, so every pure-AND query runs the
-    block-pruned intersection path and everything else falls back to the
-    distributed fold), 'blockmax' (single-term threshold 0, so every
-    eligible single-positive-term or flat-OR query runs the block-max
-    early-termination decode), and 'and_blockmax' (Σdf cap 0 + seed cap
-    0, so every pure-AND query runs the flat-AND block-max decode).
-    'blockmax' and 'and_pruned' also empty the term LRU and give it a
-    zero budget, so a warm shared engine can neither take the lru_warm
-    in-memory fold instead of block-max nor serve the pruned AND's
-    restricted reads from the cache.  Rank-identity suites run under all
-    six so no strategy loses oracle coverage."""
-    overrides = {
-        "distributed": {"_DRIVER_SCORE_MAX_POSTINGS": -1},
-        "and_pruned": {"_DRIVER_SCORE_MAX_POSTINGS": 0},
-        "blockmax": {"_BLOCKMAX_MIN_POSTINGS": 0,
-                     "_BLOCKMAX_FLAT_MIN_POSTINGS": 0},
-        "and_blockmax": {"_DRIVER_SCORE_MAX_POSTINGS": 0,
-                         "_AND_SEED_MAX_POSTINGS": 0},
-    }.get(request.param, {})
-    engine.__dict__.update(overrides)
-    prev_io = engine.io_mode
-    if request.param == "driver_sparkio":
-        engine.io_mode = "spark"
-    if request.param in ("blockmax", "and_pruned"):
-        engine._term_lru.clear()
-        engine._term_lru.budget = 0
-    try:
+    """The same engine under all six physical strategies (described in
+    strategies.forced_strategy).  Rank-identity suites run under all six
+    so no strategy loses oracle coverage."""
+    with forced_strategy(engine, request.param):
         yield engine
-    finally:
-        for attr in overrides:
-            del engine.__dict__[attr]
-        engine.io_mode = prev_io
-        engine._term_lru.budget = engine._TERM_LRU_MAX_POSTINGS

@@ -256,8 +256,9 @@ def test_blockmax_caches(spark, engine):
     merged arrays; (3) the repeat query then takes the lru_warm fast
     path (in-memory fold — identical hits, no block re-read); once the
     term LRU is emptied, block-max re-engages and the stats LRU still
-    serves its bounds (no new stats scan); (4) clear_cache() restores
-    cold behavior so bench cold trials stay honest."""
+    serves its bounds (no new stats scan), for the single-term and the
+    flat-OR query alike; (4) clear_cache() restores cold behavior so
+    bench cold trials stay honest."""
     from resin_spark.executor import SearchEngine
 
     engine.clear_cache()
@@ -293,7 +294,12 @@ def test_blockmax_caches(spark, engine):
         q2 = {"or": {"text": "banana apple"}}
         h2 = engine.topk(q2, k=10)
         assert engine.stats_lru_misses == m2 + 2
+        # the first run fully decoded both keys into the term LRU; empty
+        # it so the repeat runs the flat-OR block-max decode again
+        engine._term_lru.clear()
+        engine.last_blockmax_stats = None
         assert engine.topk(q2, k=10) == h2
+        assert engine.last_blockmax_stats is not None
         assert engine.stats_lru_misses == m2 + 2
         # cold again after clear_cache()
         engine.clear_cache()
