@@ -980,8 +980,8 @@ config) exceeds every variant effect.  zstd_shuffle shows the best
 *minimum* local[4] throughput (57.9k) and is the most promising lever on
 a real cluster (it trades CPU, which scales, for DRAM bandwidth, which
 does not), but flipping the default on one-box evidence of this noise
-level is not justified.  The dictionary-encoded term shuffle stays
-available via RESIN_SPARK_TERM_DICT=1.
+level is not justified.  The dictionary-encoded term shuffle was later
+deleted from the build (no default path reached it).
 
 ## BM25 top-10 query latency (warm session, local[{hi}])
 

@@ -44,8 +44,19 @@ def append_docs(spark: SparkSession, batch: DataFrame, root: str,
     POST write path runs WriteSession+IndexSession incrementally,
     /root/reference/src/Sir.HttpServer/Controllers/WriteController
     .cs:31-53 -> Sir.Search/Session/WriteSession.cs:26-38).  Same
-    machinery as a streaming micro-batch: conv_dim extends append-only
-    (existing doc IDs immutable).
+    machinery as a streaming micro-batch (build.append_segment):
+    conv_dim extends append-only (existing doc IDs immutable), and a
+    batch of at most build.DRIVER_APPEND_MAX_ROWS rows and 8 MiB of
+    Arrow data for a driver-visible root (build._local_dir) is written
+    in-process with pyarrow after one Spark job that reads it; larger
+    batches and remote roots run the distributed segment build.  Both
+    routes write the same rows.
+
+    Layout: the segment matches the existing index (positional or not,
+    with or without doclens).  An explicit ``positions`` value is
+    honored only for the first segment of a brand-new collection (one
+    stray POST /write?positions=true must not write a positional
+    segment into a positionless index).
 
     Idempotence: auto-allocated ids (``segment=None``) take the next
     free slot in the append namespace — re-running the same call appends
@@ -54,8 +65,6 @@ def append_docs(spark: SparkSession, batch: DataFrame, root: str,
     receipt is already complete the call is a no-op, otherwise the
     segment is (re)written in place — exactly the streaming micro-batch
     replay contract."""
-    from pyspark.sql import functions as F
-
     from resin_spark import build as B
 
     done = B.completed_segments(spark, root)
@@ -66,33 +75,7 @@ def append_docs(spark: SparkSession, batch: DataFrame, root: str,
         seg = int(segment)
         if seg in done:
             return {"segment": seg, "skipped": True}
-    conv_dim = B.extend_conv_dim(spark, batch, root)
-    dl = B._exists(spark, B.p_doclens(root))
-    # appended segments must match the existing index's physical layout:
-    # a positional collection (positions_bin column) gets positional
-    # segments, so phrase_search never meets a mixed (null-column) index.
-    # An explicit ``positions`` value is honored ONLY for the first
-    # segment of a brand-new collection; once postings exist the detected
-    # layout always wins (even over an explicit flag) — one stray
-    # POST /write?positions=true must not write a positional segment into
-    # a positionless index, which would make every later auto-detect
-    # depend on which parquet footer Spark happens to sample.
-    detected: bool | None = None
-    # keyed on the postings TABLE existing, not on lineage receipts:
-    # after truncate_index the receipts survive but the index is gone,
-    # and that state is "brand-new collection" for layout purposes — an
-    # explicit positions flag must be honored there or the collection
-    # could never be rebuilt positional via append.
-    if B._exists(spark, B.p_postings(root)):
-        try:
-            detected = ("positions_bin"
-                        in B.read_postings(spark, root).columns)
-        except Exception:
-            detected = None  # unreadable/empty postings dir: treat as new
-    positions = bool(positions) if detected is None else detected
-    seg_df = batch.withColumn("segment", F.lit(seg))
-    B._build_segment(spark, seg_df, conv_dim, root,
-                     fields or B.DEFAULT_FIELDS, seg, write_doclens=dl,
+    B.append_segment(spark, batch, root, seg, fields or B.DEFAULT_FIELDS,
                      positions=positions)
     return {"segment": seg}
 

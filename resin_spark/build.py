@@ -35,7 +35,9 @@ all segments into one (Resin's ``optimize``, SessionFactory.cs:112-190).
 from __future__ import annotations
 
 import os
+import re
 import time
+import uuid
 
 import numpy as np
 import pandas as pd
@@ -46,7 +48,7 @@ from pyspark.sql.types import (ArrayType, BinaryType, LongType,
 
 from resin_spark import ids
 from resin_spark.postings import decode_counts, decode_doc_ids
-from resin_spark.tokenizer import chars_key_py, tokens_col
+from resin_spark.tokenizer import chars_key_py, tokenize_py, tokens_col
 
 DEFAULT_FIELDS = ("text", "role", "tool")
 
@@ -77,16 +79,6 @@ POSTINGS_FIELDS = [
 ]
 POSTINGS_SCHEMA = StructType(POSTINGS_FIELDS)
 
-# Encoder output when terms ride the shuffle dictionary-encoded
-# (RESIN_SPARK_TERM_DICT=1): `term` is the dense int64 term_id; the term
-# string and chars_key are restored from the term dimension AFTER the
-# encode, so neither string rides the big shuffle.
-POSTINGS_ID_FIELDS = [
-    StructField("field", StringType(), False),
-    StructField("term", LongType(), False),
-] + POSTINGS_FIELDS[2:-1]
-POSTINGS_ID_SCHEMA = StructType(POSTINGS_ID_FIELDS)
-
 # Positional variant (build_index(..., positions=True)): one extra block
 # column holding varint position gaps laid out per posting in doc order
 # (tf == occurrence count, so runs need no length prefix — see
@@ -95,7 +87,6 @@ POSTINGS_ID_SCHEMA = StructType(POSTINGS_ID_FIELDS)
 # every non-phrase query path reads positional indexes unchanged.
 POSITIONS_FIELD = StructField("positions_bin", BinaryType(), True)
 POSTINGS_POS_SCHEMA = StructType(POSTINGS_FIELDS + [POSITIONS_FIELD])
-POSTINGS_ID_POS_SCHEMA = StructType(POSTINGS_ID_FIELDS + [POSITIONS_FIELD])
 
 
 class _arrow_batch_rows:
@@ -143,13 +134,49 @@ class _arrow_batch_rows:
 _VERSIONED = ("docs", "postings", "doclens", "stats")
 
 
+_SCHEME = re.compile(r"^([A-Za-z][A-Za-z0-9+.-]*):")
+
+
+def _local_dir(path: str) -> str | None:
+    """The driver's filesystem path for ``path``, or None when only
+    Hadoop reaches it (hdfs://, s3a://, ...): the one test of every
+    driver-side read and write (pointer files, receipts, the append
+    writer, the engine's embedded reads).  ``file:/x``, ``file:///x``
+    and ``file://localhost/x`` are all ``/x``.  A path with no scheme
+    lives on Hadoop's ``fs.defaultFS``, read from the running
+    SparkContext (local when there is none)."""
+    m = _SCHEME.match(path)
+    if m is None:
+        return path if _default_fs_is_local() else None
+    if m.group(1).lower() != "file":
+        return None
+    rest = path[m.end():]
+    if rest.startswith("//"):
+        host, _, rest = rest[2:].partition("/")
+        if host not in ("", "localhost"):
+            return None
+        rest = "/" + rest
+    return rest
+
+
+def _default_fs_is_local() -> bool:
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return True
+    default = sc._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
+    m = _SCHEME.match(default)
+    return m is None or m.group(1).lower() == "file"
+
+
 def _current_pointer(root: str) -> tuple[int, dict]:
     """(version, artifact-dir mapping) from the newest _ptr file."""
     import json as _json
     import os as _os
 
-    local = root[len("file://"):] if root.startswith("file://") else root
-    if "://" not in local:
+    local = _local_dir(root)
+    if local is not None:
         import glob as _glob
 
         ptrs = sorted(_glob.glob(_os.path.join(local, "_ptr_*.json")))
@@ -188,8 +215,8 @@ def _pointer_versions(root: str) -> list[int]:
     import os as _os
     import re as _re
 
-    local = root[len("file://"):] if root.startswith("file://") else root
-    if "://" not in local:
+    local = _local_dir(root)
+    if local is not None:
         import glob as _glob
 
         return sorted(
@@ -238,8 +265,8 @@ def _pointer_at(root: str, version: int) -> dict:
         raise FileNotFoundError(
             f"snapshot 0 (plain dirs) GC'd at {root}; available: {avail}")
     name = f"{root}/_ptr_{version:08d}.json"
-    local = name[len("file://"):] if name.startswith("file://") else name
-    if "://" not in local:
+    local = _local_dir(name)
+    if local is not None:
         import os as _os
 
         if not _os.path.exists(local):
@@ -272,8 +299,8 @@ def _write_pointer(spark, root: str, version: int, dirs: dict) -> None:
 
     payload = _json.dumps({"version": version, "dirs": dirs}).encode()
     name = f"{root}/_ptr_{version:08d}.json"
-    local = name[len("file://"):] if name.startswith("file://") else name
-    if "://" not in local:
+    local = _local_dir(name)
+    if local is not None:
         import os as _os
         import uuid as _uuid
 
@@ -395,8 +422,7 @@ def doc_lengths(docs: DataFrame, fields: tuple[str, ...]) -> DataFrame:
     return out.filter(F.col("dl") > 0)
 
 
-def _encode_sorted_arrays(fa, ta, ba, D, T, L, P=None,
-                          with_chars_key: bool = True) -> pd.DataFrame:
+def _encode_sorted_arrays(fa, ta, ba, D, T, L, P=None) -> pd.DataFrame:
     """Encode a run of occurrence rows sorted by (field, term, block_id,
     doc_id) into one output row per (field, term, block) group.
 
@@ -470,15 +496,13 @@ def _encode_sorted_arrays(fa, ta, ba, D, T, L, P=None,
         pg[starts] = P[starts]
         out["positions_bin"] = varint_encode_segmented(
             pg.astype(np.uint64), off)
-    if with_chars_key:
-        # ONE definition of the char-bag key, shared with the query
-        # side (executor matches on chars_key_py of the query token)
-        out["chars_key"] = [chars_key_py(t) for t in g_terms]
+    # ONE definition of the char-bag key, shared with the query side
+    # (executor matches on chars_key_py of the query token)
+    out["chars_key"] = [chars_key_py(t) for t in g_terms]
     return pd.DataFrame(out)
 
 
 def _encode_sorted_pdf(pdf: pd.DataFrame, unit_tf: bool = False,
-                       with_chars_key: bool = True,
                        positions: bool = False) -> pd.DataFrame:
     D = pdf["doc_id"].to_numpy(dtype=np.int64)
     return _encode_sorted_arrays(
@@ -489,12 +513,10 @@ def _encode_sorted_pdf(pdf: pd.DataFrame, unit_tf: bool = False,
         None if unit_tf else pdf["tf"].to_numpy(dtype=np.int64),
         pdf["dl"].to_numpy(dtype=np.int64),
         P=pdf["pos"].to_numpy(dtype=np.int64) if positions else None,
-        with_chars_key=with_chars_key,
     )
 
 
-def _merge_encode_iter(unit_tf: bool = False, with_chars_key: bool = True,
-                       positions: bool = False):
+def _merge_encode_iter(unit_tf: bool = False, positions: bool = False):
     """mapInPandas worker factory over a partition sorted by (field,
     term, doc_id) — block_id is a monotone function of doc_id, so the
     sort order equals (field, term, block_id, doc_id) and the block key
@@ -519,8 +541,7 @@ def _merge_encode_iter(unit_tf: bool = False, with_chars_key: bool = True,
             out = _encode_sorted_pdf(
                 carry_chunks[0] if len(carry_chunks) == 1
                 else pd.concat(carry_chunks, ignore_index=True),
-                unit_tf=unit_tf, with_chars_key=with_chars_key,
-                positions=positions,
+                unit_tf=unit_tf, positions=positions,
             )
             carry_chunks, carry_key = [], None
             return out
@@ -554,7 +575,6 @@ def _merge_encode_iter(unit_tf: bool = False, with_chars_key: bool = True,
                 body = pdf.iloc[:cut]
             if len(body):
                 yield _encode_sorted_pdf(body, unit_tf=unit_tf,
-                                         with_chars_key=with_chars_key,
                                          positions=positions)
             carry_chunks = [pdf.iloc[cut:]]
             carry_key = last_key
@@ -637,92 +657,6 @@ def postings_blocks(occurrences: DataFrame,
     return parted.mapInPandas(
         _merge_encode_iter(unit_tf, positions=positions),
         schema=POSTINGS_POS_SCHEMA if positions else POSTINGS_SCHEMA)
-
-
-def build_term_dim(occurrences: DataFrame) -> DataFrame:
-    """Order-preserving dense term dictionary: (field, term) -> term_id
-    with term_id = rank under (field, term) lexicographic order, so
-    sorting by term_id IS sorting by (field, term) — posting files stay
-    term-sorted (parquet min/max pruning intact) when the id is the
-    shuffle/sort key.  Same distributed sort+zipWithIndex shape as
-    conv_dim (ids.build_conv_dim); vocab is tiny relative to occurrences.
-    chars_key is computed here ONCE PER VOCAB ROW (JVM expression)
-    instead of once per posting block group."""
-    from resin_spark.tokenizer import chars_key_col
-
-    spark = occurrences.sparkSession
-    vocab = occurrences.select("field", "term").distinct().sort("field", "term")
-    rdd = vocab.rdd.map(lambda r: (r[0], r[1])).zipWithIndex().map(
-        lambda x: (x[0][0], x[0][1], x[1])
-    )
-    dim = spark.createDataFrame(
-        rdd,
-        StructType([
-            StructField("field", StringType(), False),
-            StructField("term", StringType(), False),
-            StructField("term_id", LongType(), False),
-        ]),
-    )
-    return dim.withColumn("chars_key", chars_key_col("term"))
-
-
-def postings_blocks_dicted(occurrences: DataFrame,
-                           out_partitions: int | None = None,
-                           unit_tf: bool = False,
-                           positions: bool = False) -> DataFrame:
-    """postings_blocks with the term column dictionary-encoded to int64
-    for the big shuffle (RESIN_SPARK_TERM_DICT=1; the 1->4 scaling
-    experiment of BENCH.md).  Identical output table.
-
-    Motivation: the occurrence shuffle carries one term STRING per token
-    (~10 bytes + offsets through the shuffle sorter, Arrow transfer, and
-    the encoder's numpy object-array change-point compares — per-element
-    Python).  With a dense id the sorter compares int64s, the Arrow batch
-    is fixed-width, and the encoder's group detection is pure C.  Costs:
-    one vocab-sized distinct+sort+zipWithIndex, a map-side join occ->id,
-    and a blocks-sized join back to restore (term, chars_key).
-
-    Scale note: the occ->id join is broadcast here (vocab of the
-    synthetic corpus is small); at 100 TB vocab (~10^8 rows) you would
-    bucket both sides on (field, term) instead — the join stays map-side
-    either way.  The restore join is on blocks (orders of magnitude
-    smaller than occurrences)."""
-    spark = occurrences.sparkSession
-    if positions and not unit_tf:
-        raise ValueError("positional postings need unit-tf occurrence rows")
-    n_parts = out_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
-    vocab = build_term_dim(occurrences).persist()
-    cols = ["doc_id", "dl"] + ([] if unit_tf else ["tf"])
-    sort_cols = ["field", "term", "doc_id"]
-    if positions:
-        cols.append("pos")
-        sort_cols.append("pos")
-    occ_id = (
-        occurrences.join(F.broadcast(vocab.select("field", "term", "term_id")),
-                         ["field", "term"])
-        .select("field", F.col("term_id").alias("term"), *cols)
-    )
-    block_expr = F.shiftright(F.col("doc_id"), BLOCK_SHIFT)
-    parted = (
-        occ_id.repartition(n_parts, F.col("field"), F.col("term"), block_expr)
-        # term_id rank order == (field, term) order, so this sort keeps
-        # the output (field, term)-sorted per file exactly like the
-        # string path
-        .sortWithinPartitions(*sort_cols)
-    )
-    enc = parted.mapInPandas(
-        _merge_encode_iter(unit_tf, with_chars_key=False, positions=positions),
-        schema=POSTINGS_ID_POS_SCHEMA if positions else POSTINGS_ID_SCHEMA,
-    )
-    out_fields = (POSTINGS_POS_SCHEMA if positions else POSTINGS_SCHEMA).fields
-    restored = (
-        enc.withColumnRenamed("term", "term_id")
-        .join(F.broadcast(vocab), ["field", "term_id"])
-        .select(*[f.name for f in out_fields])
-    )
-    return restored
 
 
 def decoded_postings(postings: DataFrame) -> DataFrame:
@@ -825,7 +759,9 @@ def extend_conv_dim(spark: SparkSession, batch: DataFrame, root: str) -> DataFra
     slots ABOVE the current maximum (existing slots are immutable — doc
     IDs already packed from them must stay valid).  Returns the full
     (old + new) dimension.  Used by resumed builds and streaming appends."""
-    new_convs = batch.select("conv_id").distinct()
+    # null conv_ids never join (ids.with_doc_id is an inner join), and
+    # the dimension's conv_id is non-nullable
+    new_convs = batch.select("conv_id").dropna().distinct()
     # existence is probed explicitly: ONLY a missing dimension means
     # "start empty".  A transient read failure (FS hiccup, corrupt
     # footer) must raise, not silently restart slot assignment at 0 —
@@ -898,11 +834,8 @@ def _driver_parquet_append(dir_path: str, columns: dict, schema, ddl: str) -> No
     createDataFrame infer types would write int64 where the arrow path
     writes int32, and a root fed by both paths would then fail the
     lineage read with a parquet schema-merge error."""
-    import os
-    import re
-    import uuid
-
-    if re.match(r"^[a-z0-9+.-]+://", dir_path) and not dir_path.startswith("file://"):
+    local = _local_dir(dir_path)
+    if local is None:
         from pyspark.sql import SparkSession
 
         spark = SparkSession.getActiveSession()
@@ -912,12 +845,24 @@ def _driver_parquet_append(dir_path: str, columns: dict, schema, ddl: str) -> No
         ).write.mode("append").parquet(dir_path)
         return
     import pyarrow as pa
+
+    os.replace(*_stage_parquet(local, pa.table(columns, schema=schema)))
+
+
+def _stage_parquet(local_dir: str, table, **kw) -> tuple[str, str]:
+    """Write ``table`` into ``local_dir`` under a hidden name and return
+    (staged, final) for ``os.replace``.  Spark and pyarrow discovery both
+    skip names starting with '.', so a write that dies before the rename
+    leaves no readable half-file."""
     import pyarrow.parquet as pq
 
-    local = dir_path[len("file://"):] if dir_path.startswith("file://") else dir_path
-    os.makedirs(local, exist_ok=True)
-    table = pa.table(columns, schema=schema)
-    pq.write_table(table, f"{local}/part-{uuid.uuid4().hex}.parquet")
+    os.makedirs(local_dir, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    staged = os.path.join(local_dir, f".{name}")
+    # no stored arrow schema: pyarrow then reads these files the way it
+    # reads Spark's (e.g. INT96 ts as timestamp[ns])
+    pq.write_table(table, staged, store_schema=False, **kw)
+    return staged, os.path.join(local_dir, name)
 
 
 def _arrow_schemas():
@@ -942,7 +887,47 @@ def _arrow_schemas():
 _LINEAGE_ARROW, _METRICS_ARROW = _arrow_schemas()
 
 
+def _arrow_schema(struct: StructType):
+    """pyarrow twin of a flat Spark schema of string/long/binary columns."""
+    import pyarrow as pa
+
+    types = {StringType(): pa.string(), LongType(): pa.int64(),
+             BinaryType(): pa.binary()}
+    return pa.schema([pa.field(f.name, types[f.dataType], f.nullable)
+                      for f in struct.fields])
+
+
+def _driver_schemas():
+    import pyarrow as pa
+
+    # the physical types Spark writes: stats' n_docs is F.lit of a
+    # Python int (int32 below 2^31), doclens' dl a long cast
+    stats = pa.schema([pa.field("field", pa.string()),
+                       pa.field("total_tokens", pa.int64()),
+                       pa.field("n_postings", pa.int64()),
+                       pa.field("n_docs", pa.int32(), False)])
+    doclens = pa.schema([pa.field("field", pa.string(), False),
+                         pa.field("doc_id", pa.int64()),
+                         pa.field("dl", pa.int64())])
+    return stats, doclens
+
+
+_STATS_ARROW, _DOCLENS_ARROW = _driver_schemas()
+
+
 def completed_segments(spark: SparkSession, root: str) -> set[int]:
+    local = _local_dir(p_lineage(root))
+    if local is not None:
+        import pyarrow.dataset as pads
+
+        try:
+            lin = pads.dataset(local, format="parquet").to_table(
+                columns=["segment"],
+                filter=(pads.field("step") == "segment")
+                & (pads.field("status") == "complete"))
+        except Exception:
+            return set()
+        return set(lin["segment"].to_pylist())
     try:
         lin = spark.read.parquet(p_lineage(root))
     except Exception:
@@ -1035,6 +1020,13 @@ def build_index(
     return {"turns": total_turns, "wall_sec": wall, "segments": n_segments}
 
 
+def _docs_parts(spark: SparkSession) -> int:
+    """Files a Spark segment build splits its docs into; a driver-written
+    segment uses as many row groups, so a point fetch decodes as many
+    rows either way."""
+    return max(2, spark.sparkContext.defaultParallelism)
+
+
 def _build_segment(
     spark: SparkSession,
     seg_df: DataFrame,
@@ -1053,7 +1045,7 @@ def _build_segment(
     # row-group-pruned point lookup.  Range partitioning is ARITHMETIC
     # (conv_slot is dense 0..n_convs-1, so bucket = slot*P/n_convs gives
     # contiguous equal ranges) — no repartitionByRange sampling job.
-    n_parts = max(2, spark.sparkContext.defaultParallelism)
+    n_parts = _docs_parts(spark)
     if n_convs:
         # 4x buckets per partition so hash placement stays balanced while
         # each file still holds a few contiguous conv ranges
@@ -1096,13 +1088,8 @@ def _build_segment(
     # tf/dl/stats derive inside the streaming merge-encoder (unit_tf:
     # tf = duplicate run length, no tf column in the shuffle)
     occ = tokenized(docs, fields, positions=positions)
-    if os.environ.get("RESIN_SPARK_TERM_DICT") == "1":
-        blocks = postings_blocks_dicted(
-            occ, out_partitions=out_partitions, unit_tf=True,
-            positions=positions)
-    else:
-        blocks = postings_blocks(occ, out_partitions=out_partitions,
-                                 unit_tf=True, positions=positions)
+    blocks = postings_blocks(occ, out_partitions=out_partitions,
+                             unit_tf=True, positions=positions)
     with _arrow_batch_rows(spark):
         blocks.write.mode("overwrite").option("compression", "zstd").parquet(
             f"{p_postings(root)}/segment={seg}"
@@ -1144,6 +1131,256 @@ def _build_segment(
         ],
     )
     return n_docs
+
+
+# ---------------------------------------------------------------- append
+# Largest batch the driver writes itself, in rows; append_route also
+# bounds its Arrow size, at 4 * DOCS_ROW_GROUP_BYTES (8 MiB).  The driver
+# writer's time grows with bytes (one Python thread tokenizes), the
+# Spark build's mostly does not.  Measured on 4 cores (local[4]), both
+# writers on twin positional roots: 16k turns of ~110 B (1.8 MB) took
+# the driver 0.7-1.3 s and Spark 4.2-4.8 s; 1k turns of ~3.5 KB
+# (3.5 MB) 2.6-2.8 s against 6.1-7.1 s; 3.5k turns of ~3.5 KB (12 MB)
+# 10.1-11.1 s against 8.5-8.9 s.  So bytes, not rows, set the crossover
+# (~10 MB there); the row bound caps what one append holds in memory.
+DRIVER_APPEND_MAX_ROWS = 16_384
+
+
+def append_route(n_rows: int, n_bytes: int, root: str) -> str:
+    """'driver' when a batch of ``n_rows`` rows and ``n_bytes`` Arrow
+    bytes appends to ``root`` through the driver-side segment writer,
+    else 'spark' (_build_segment): the root must be a driver-visible
+    path (_local_dir) and the batch small in rows and in bytes."""
+    if (_local_dir(root) is not None and n_rows <= DRIVER_APPEND_MAX_ROWS
+            and n_bytes <= 4 * DOCS_ROW_GROUP_BYTES):
+        return "driver"
+    return "spark"
+
+
+def _postings_positional(spark: SparkSession, root: str) -> bool | None:
+    """Whether the existing postings table is positional, or None when
+    there is none (a new collection, or one whose index was truncated:
+    lineage receipts survive truncate_index, so they cannot decide)."""
+    local = _local_dir(p_postings(root))
+    try:
+        if local is not None:
+            import pyarrow.dataset as pads
+
+            ds = pads.dataset(local, format="parquet", partitioning="hive")
+            return "positions_bin" in ds.schema.names if ds.files else None
+        if not _exists(spark, p_postings(root)):
+            return None
+        return "positions_bin" in read_postings(spark, root).columns
+    except Exception:
+        return None  # unreadable/empty postings dir: treat as new
+
+
+def append_segment(spark: SparkSession, batch: DataFrame, root: str,
+                   seg: int, fields: tuple[str, ...] = DEFAULT_FIELDS,
+                   positions: bool | None = None,
+                   write_doclens: bool | None = None) -> int:
+    """Write ``batch`` as index segment ``seg`` of an existing (or new)
+    collection, extending conv_dim append-only; returns the doc count.
+    The one append entry of api.append_docs and streaming's micro-batches.
+
+    Appended segments keep the collection's physical layout: a
+    positional postings table gets positional segments and a root with
+    a doclens artifact keeps writing it (``None`` detects both).  An
+    explicit ``positions`` is honored only while no postings exist.
+
+    Two routes (append_route).  On a driver-visible root the batch is
+    read once (``limit(DRIVER_APPEND_MAX_ROWS + 1).toArrow()``, the only
+    Spark job; it holds at most that many rows, however wide); if it
+    fits in rows and bytes, _write_segment_driver writes the segment
+    with pyarrow.  Larger batches and remote roots run _build_segment.
+    Both write row-identical artifacts."""
+    tbl = None
+    if _local_dir(root) is not None:
+        tbl = batch.limit(DRIVER_APPEND_MAX_ROWS + 1).toArrow()
+    detected = _postings_positional(spark, root)
+    positions = bool(positions) if detected is None else detected
+    if write_doclens is None:
+        write_doclens = _exists(spark, p_doclens(root))
+    if (tbl is not None
+            and append_route(tbl.num_rows, tbl.nbytes, root) == "driver"
+            and _driver_writable(tbl.schema, fields)):
+        return _write_segment_driver(tbl, root, fields, seg,
+                                     positions=positions,
+                                     write_doclens=write_doclens,
+                                     docs_parts=_docs_parts(spark))
+    conv_dim = extend_conv_dim(spark, batch, root)
+    return _build_segment(spark, batch.withColumn("segment", F.lit(seg)),
+                          conv_dim, root, fields, seg,
+                          write_doclens=write_doclens, positions=positions)
+
+
+def _driver_writable(schema, fields: tuple[str, ...]) -> bool:
+    """Whether _write_segment_driver writes this batch the way Spark
+    would: every indexed field is a string column, and every column has
+    a type whose parquet form matches Spark's (Spark writes timestamps
+    as INT96; pyarrow can do that only for all of a file's timestamps,
+    so a timestamp_ntz column, which Spark writes as INT64, goes to
+    Spark, as do decimals and nested types)."""
+    import pyarrow.types as pat
+
+    def flat(t) -> bool:
+        return (pat.is_string(t) or pat.is_integer(t) or pat.is_floating(t)
+                or pat.is_boolean(t) or pat.is_binary(t) or pat.is_date32(t)
+                or (pat.is_timestamp(t) and t.tz is not None))
+
+    return (all(flat(f.type) for f in schema)
+            and all(f in schema.names and pat.is_string(schema.field(f).type)
+                    for f in fields))
+
+
+def _write_segment_driver(tbl, root: str, fields: tuple[str, ...], seg: int,
+                          positions: bool = False,
+                          write_doclens: bool = False,
+                          docs_parts: int = 2) -> int:
+    """_build_segment's driver-side twin for a batch already in driver
+    memory (an Arrow table): the same artifacts, row for row, written
+    with pyarrow and no Spark job.  The reference's write path indexes
+    in-process the same way (WriteSession/IndexSession).
+
+    * conv_dim: new conv_ids get slots above the current maximum in
+      sorted conv_id order (extend_conv_dim's zipWithIndex assignment);
+    * docs: inner join on conv_id, doc_id as ids.with_doc_id computes
+      it, sorted by doc_id, the join's column order, INT96 ts, snappy,
+      in ``docs_parts`` row groups (the Spark build's file count), more
+      when that would put over DOCS_ROW_GROUP_BYTES in one;
+    * postings: tokenize_py occurrences sorted by (field, term, doc_id,
+      pos) and encoded by _encode_sorted_arrays (the mapInPandas
+      encoder), one zstd file;
+    * stats from the block metadata (``n_docs`` int32, as Spark's lit
+      writes it), doclens when the root has them.
+
+    Every data file is staged under a hidden name and renamed into
+    place, and the lineage receipt is written last.  The segment's
+    directories are emptied first (the Spark path's overwrite mode), so
+    a retry replaces whatever a failed attempt left."""
+    import shutil
+
+    import pyarrow as pa
+
+    t0 = time.monotonic()
+    slots = _extend_conv_dim_driver(root, tbl["conv_id"])
+    slot = np.array([slots.get(c, -1) for c in tbl["conv_id"].to_pylist()],
+                    dtype=np.int64)
+    keep = slot >= 0  # the inner join drops unknown (null) conv_ids
+    docs = tbl.filter(pa.array(keep))
+    if docs["turn_idx"].null_count:
+        raise ValueError("append batch has rows with a null turn_idx")
+    D = slot[keep] * (1 << ids.TURN_BITS) + docs["turn_idx"].to_numpy(
+        zero_copy_only=False).astype(np.int64)
+    order = np.argsort(D, kind="stable")
+    D = D[order]
+    cols = ["conv_id"] + [c for c in docs.column_names
+                          if c not in ("conv_id", "segment", "conv_slot")]
+    docs = docs.select(cols).take(pa.array(order)).append_column(
+        "doc_id", pa.array(D, pa.int64()))
+    n_docs = docs.num_rows
+
+    # occurrences: one row per token, field by field
+    f_code, terms, occ_d, occ_l, occ_p, lens_by_field = [], [], [], [], [], []
+    for i, f in enumerate(sorted(fields)):
+        toks = [tokenize_py(t) for t in docs[f].to_pylist()]
+        lens = np.fromiter(map(len, toks), np.int64, n_docs)
+        lens_by_field.append((f, lens))
+        n = int(lens.sum())
+        start = np.repeat(np.cumsum(lens) - lens, lens)
+        f_code.append(np.full(n, i, np.int64))
+        terms.extend(t for doc_toks in toks for t in doc_toks)
+        occ_d.append(np.repeat(D, lens))
+        occ_l.append(np.repeat(lens, lens))
+        occ_p.append(np.arange(n, dtype=np.int64) - start)
+    schema = _arrow_schema(POSTINGS_POS_SCHEMA if positions
+                           else POSTINGS_SCHEMA)
+    if terms:
+        uniq, t_code = np.unique(np.array(terms, dtype=object),
+                                 return_inverse=True)
+        fc, od, ol, op = (np.concatenate(a)
+                          for a in (f_code, occ_d, occ_l, occ_p))
+        o = np.lexsort((op, od, t_code, fc))
+        blocks = _encode_sorted_arrays(
+            np.array(sorted(fields), dtype=object)[fc[o]], uniq[t_code[o]],
+            np.right_shift(od[o], BLOCK_SHIFT), od[o], None, ol[o],
+            P=op[o] if positions else None)
+        postings = pa.Table.from_pandas(blocks[schema.names], schema=schema,
+                                        preserve_index=False)
+    else:
+        postings = schema.empty_table()
+    agg = postings.group_by("field").aggregate(
+        [("sum_tf", "sum"), ("df_block", "sum")]).to_pydict()
+    per_field = dict(zip(agg["field"], zip(agg["sum_tf_sum"],
+                                           agg["df_block_sum"])))
+    stats = pa.table({
+        "field": list(fields),
+        "total_tokens": [per_field.get(f, (0, 0))[0] for f in fields],
+        "n_postings": [per_field.get(f, (0, 0))[1] for f in fields],
+        "n_docs": [n_docs] * len(fields),
+    }, schema=_STATS_ARROW)
+
+    # docs_parts row groups, each at most ~DOCS_ROW_GROUP_BYTES of Arrow
+    # data (the Spark build's parquet.block.size bounds its groups by
+    # compressed bytes), so a point fetch decodes a bounded group
+    rg_rows = -(-n_docs // docs_parts)
+    if docs.nbytes:
+        rg_rows = min(rg_rows, n_docs * DOCS_ROW_GROUP_BYTES // docs.nbytes)
+    outputs = [(p_docs(root), docs, "snappy", max(1, rg_rows)),
+               (p_postings(root), postings, "zstd", None),
+               (p_stats(root), stats, "snappy", None)]
+    if write_doclens:
+        dl = [(f, D[lens > 0], lens[lens > 0]) for f, lens in lens_by_field]
+        outputs.append((p_doclens(root), pa.table({
+            "field": [f for f, d, _ in dl for _ in range(len(d))],
+            "doc_id": np.concatenate([d for _, d, _ in dl]),
+            "dl": np.concatenate([n for _, _, n in dl]),
+        }, schema=_DOCLENS_ARROW), "snappy", None))
+    staged = []
+    for art, table, codec, rg_rows in outputs:
+        seg_dir = f"{_local_dir(art)}/segment={seg}"
+        shutil.rmtree(seg_dir, ignore_errors=True)
+        staged.append(_stage_parquet(seg_dir, table, compression=codec,
+                                     row_group_size=rg_rows,
+                                     use_deprecated_int96_timestamps=True))
+    for tmp, final in staged:
+        os.replace(tmp, final)
+
+    wall = time.monotonic() - t0
+    _append_lineage(None, root, seg, "segment", n_docs, wall)
+    _append_metrics(None, root, [
+        (seg, "build", "n_docs", float(n_docs)),
+        (seg, "build", "wall_sec", float(wall)),
+        (seg, "build", "docs_per_sec", float(n_docs / wall) if wall else 0.0),
+    ])
+    return n_docs
+
+
+def _extend_conv_dim_driver(root: str, conv_ids) -> dict:
+    """extend_conv_dim on the driver: {conv_id: conv_slot} for the
+    non-null ``conv_ids``, appending slots for the new ones to conv_dim."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+
+    want = pc.unique(conv_ids.drop_null())
+    local = _local_dir(p_conv_dim(root))
+    slots, base = {}, 0
+    if os.path.isdir(local):
+        dim = pads.dataset(local, format="parquet")
+        hit = dim.to_table(filter=pads.field("conv_id").isin(want))
+        slots = dict(zip(hit["conv_id"].to_pylist(),
+                         hit["conv_slot"].to_pylist()))
+        top = pc.max(dim.to_table(columns=["conv_slot"])["conv_slot"]).as_py()
+        base = 0 if top is None else top + 1
+    fresh = sorted(set(want.to_pylist()) - slots.keys())
+    if fresh:
+        new = range(base, base + len(fresh))
+        _driver_parquet_append(p_conv_dim(root),
+                               {"conv_id": fresh, "conv_slot": list(new)},
+                               _arrow_schema(ids.CONV_DIM_SCHEMA),
+                               ids.CONV_DIM_SCHEMA)
+        slots.update(zip(fresh, new))
+    return slots
 
 
 def resume_build(spark, transcripts, root, **kw) -> dict:
@@ -1245,9 +1482,14 @@ def read_postings(spark: SparkSession, root: str,
 
 
 def read_docs(spark: SparkSession, root: str,
-              snapshot: int | None = None) -> DataFrame:
+              snapshot: int | None = None, schema=None) -> DataFrame:
+    """The docs table; a known ``schema`` skips Spark's footer-reading
+    schema-inference job."""
     p = p_docs(root, snapshot)
-    return spark.read.option("basePath", p).parquet(f"{p}/segment=*")
+    reader = spark.read.option("basePath", p)
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(f"{p}/segment=*")
 
 
 def read_stats(spark: SparkSession, root: str,

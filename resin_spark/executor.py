@@ -153,10 +153,19 @@ class SearchEngine:
         self._stats: dict[str, dict] | None = None
         self._cached: list[DataFrame] = []
         self._docs_df: DataFrame | None = None
+        # kept across refresh(): appends add rows, never docs columns, so
+        # the re-created reader skips Spark's schema-inference job
+        self._docs_schema = None
         self._postings_df: DataFrame | None = None
         self._term_dir: DataFrame | None = None
         self._term_df_driver: dict | None = None
         self._term_df_checked = False
+        # (files, block rows, df map) the embedded mirror was built from,
+        # kept across refresh(): published files are immutable, so after
+        # an append only the new files are read and their df added
+        self._term_df_base: tuple | None = None
+        # per-file footer/stats reads, also kept across refresh()
+        self._per_file: dict = {}
         self._docs_size: int | None = None
         self._pa_cache: dict = {}
         # decoded-postings LRU: (field, term) -> (uid, tf, dl) numpy
@@ -197,13 +206,11 @@ class SearchEngine:
 
     @staticmethod
     def _local_path(p: str) -> str | None:
-        """Driver-visible directory for ``p`` (no-scheme or file: paths
-        only), else None — the embedded-IO eligibility check."""
-        q = p[7:] if p.startswith("file://") else (
-            p[5:] if p.startswith("file:") else p)
-        if "://" in q:
-            return None
-        return q if os.path.isdir(q) else None
+        """Driver-visible directory for ``p`` (build._local_dir, and the
+        directory must exist), else None — the embedded-IO eligibility
+        check."""
+        q = B._local_dir(p)
+        return q if q is not None and os.path.isdir(q) else None
 
     def _pa_dataset(self, name: str):
         """pyarrow dataset over a local artifact dir, resolved once per
@@ -259,7 +266,9 @@ class SearchEngine:
         # directory listing + parquet footers (re-listing per query costs
         # more than the query itself on object stores)
         if self._docs_df is None:
-            self._docs_df = B.read_docs(self.spark, self.root, self.snapshot)
+            self._docs_df = B.read_docs(self.spark, self.root, self.snapshot,
+                                        self._docs_schema)
+            self._docs_schema = self._docs_df.schema
         return self._docs_df
 
     def postings(self) -> DataFrame:
@@ -303,18 +312,37 @@ class SearchEngine:
         if not self._term_df_checked:
             self._term_df_checked = True
             ds = self._pa_dataset("postings")
-            if ds is not None and (
-                    ds.count_rows() <= self._PA_TERM_DIR_MAX_BLOCK_ROWS):
-                # embedded mirror: group block rows driver-side (pandas);
-                # Σ df_block over blocks = df exactly as the Spark path
-                pdf = ds.to_table(
-                    columns=["field", "term", "df_block"]).to_pandas()
-                agg = pdf.groupby(["field", "term"])["df_block"].sum()
-                if len(agg) <= self._TERM_DF_DRIVER_MAX_ROWS:
-                    self._term_df_driver = {
-                        (f, t): int(v) for (f, t), v in agg.items()
-                    }
-                return self._term_df_driver
+            if ds is not None:
+                import pyarrow.dataset as pads
+
+                files = frozenset(ds.files)
+                old, n_rows, df = self._term_df_base or (frozenset(), 0, {})
+                if not old <= files:  # a segment rewritten, or compacted
+                    old, n_rows, df = frozenset(), 0, {}
+                new = (pads.dataset(sorted(files - old), format="parquet")
+                       if files - old else None)
+                if new is not None:
+                    n_rows += new.count_rows()
+                if n_rows <= self._PA_TERM_DIR_MAX_BLOCK_ROWS:
+                    if new is not None:
+                        # embedded mirror: group block rows driver-side;
+                        # Σ df_block over blocks = df exactly as the
+                        # Spark path
+                        agg = new.to_table(
+                            columns=["field", "term", "df_block"]
+                        ).group_by(["field", "term"]).aggregate(
+                            [("df_block", "sum")])
+                        keys = zip(agg["field"].to_pylist(),
+                                   agg["term"].to_pylist())
+                        df = dict(df)
+                        get = df.get
+                        df.update({k: get(k, 0) + v for k, v in zip(
+                            keys, agg["df_block_sum"].to_pylist())})
+                    self._term_df_base = (files, n_rows, df)
+                    if len(df) <= self._TERM_DF_DRIVER_MAX_ROWS:
+                        self._term_df_driver = df
+                    return self._term_df_driver
+                self._term_df_base = None
             rows = (
                 self.term_directory().select("field", "term", "df")
                 .limit(self._TERM_DF_DRIVER_MAX_ROWS + 1).collect()
@@ -352,7 +380,10 @@ class SearchEngine:
         the artifact dir is unchanged), and, through clear_cache(), the
         persisted frames and every LRU (a term's postings grow under
         append — a stale LRU hit, or the lru_warm fast path built on it,
-        would keep serving the pre-append snapshot)."""
+        would keep serving the pre-append snapshot).  What was read from
+        published files is kept (the docs schema, the df mirror's base,
+        per-file footers and stats): files are never rewritten in place,
+        so the reopen reads only the appended ones."""
         self._docs_df = None
         self._postings_df = None
         self._stats = None
@@ -364,6 +395,13 @@ class SearchEngine:
             self._term_dir = None
         self._pa_cache.clear()
         self.clear_cache()
+        if self._term_df_base is not None:
+            # embedded engine: rebuild the df mirror, stats and footer
+            # index here (reading only the appended files), so the first
+            # query after an append does not pay for the reopen
+            self._term_df_driver_map()
+            self.stats()
+            self._docs_rg_index()
 
     def doc_count(self) -> int:
         """S13 — GetDocCount (SessionFactory.cs:54-62).  Every stats row
@@ -409,18 +447,20 @@ class SearchEngine:
             lp = self._local_path(p) if self.io_mode == "auto" else None
             if lp is not None:
                 import pyarrow.dataset as pads
+                import pyarrow.parquet as pq
 
-                pdf = pads.dataset(
-                    lp, format="parquet", partitioning="hive"
-                ).to_table(
-                    columns=["field", "total_tokens", "n_docs"]
-                ).to_pandas()
-                agg = pdf.groupby("field")[["total_tokens", "n_docs"]].sum()
-                rows = [
-                    {"field": f, "total_tokens": int(r["total_tokens"]),
-                     "n_docs": int(r["n_docs"])}
-                    for f, r in agg.iterrows()
-                ]
+                files = pads.dataset(lp, format="parquet",
+                                     partitioning="hive").files
+                tot: dict = {}
+                for part in self._file_memo("stats", files, lambda f: (
+                        pq.read_table(f, columns=["field", "total_tokens",
+                                                  "n_docs"]).to_pylist())):
+                    for r in part:
+                        t, n = tot.get(r["field"], (0, 0))
+                        tot[r["field"]] = (t + r["total_tokens"],
+                                           n + r["n_docs"])
+                rows = [{"field": f, "total_tokens": t, "n_docs": n}
+                        for f, (t, n) in tot.items()]
             else:
                 rows = (
                     B.read_stats(self.spark, self.root, self.snapshot)
@@ -512,17 +552,17 @@ class SearchEngine:
         return self._project_ranked(out, docs, sel)
 
     @staticmethod
-    def _ranked_cols(docs: DataFrame, sel: list[str] | None) -> list[str]:
+    def _ranked_cols(columns: list[str], sel: list[str] | None) -> list[str]:
         cols = ["conv_id", "turn_idx"]
         if sel:
             cols += [c for c in sel if c not in ("conv_id", "turn_idx")]
         else:
-            cols += [c for c in ("role", "text", "tool", "ts") if c in docs.columns]
+            cols += [c for c in ("role", "text", "tool", "ts") if c in columns]
         return cols
 
     def _project_ranked(self, out: DataFrame, docs: DataFrame,
                         sel: list[str] | None) -> DataFrame:
-        out = out.select(*self._ranked_cols(docs, sel), "score")
+        out = out.select(*self._ranked_cols(docs.columns, sel), "score")
         return out.orderBy(F.desc("score"), F.asc("conv_id"), F.asc("turn_idx"))
 
     def topk(self, query: dict | Query, k: int = 10, skip: int = 0,
@@ -1705,42 +1745,21 @@ class SearchEngine:
         None when any group lacks doc_id stats, is oversized (legacy
         layout), or the dataset is unavailable — callers fall back to
         the dataset scanner.  Cached with the pa-dataset lifecycle:
-        refresh() drops it (an append adds files), clear_cache() keeps
-        it (IO metadata, not decoded query data — same contract as the
-        cached datasets)."""
+        refresh() drops it (an append adds files; only their footers are
+        read again, see _file_memo), clear_cache() keeps it (IO
+        metadata, not decoded query data — same contract as the cached
+        datasets)."""
         cached = self._pa_cache.get("__docs_rg__")
         if cached is not None:
             return None if cached == "n/a" else cached
-        import pyarrow.parquet as pq
-
         ds = self._pa_dataset("docs")
         out = "n/a"
-        # footer pass is once-per-engine and driver-local; still, bound
+        # footer pass is once per file and driver-local; still, bound
         # the file count so a pathological layout cannot stall warmup
         if ds is not None and len(ds.files) <= 4096:
-            entries = []
-            ok = True
-            for f in ds.files:
-                try:
-                    md = pq.read_metadata(f)
-                    ncols = md.num_columns
-                    names = [md.schema.column(i).name for i in range(ncols)]
-                    ci = names.index("doc_id")
-                except Exception:
-                    ok = False
-                    break
-                for g in range(md.num_row_groups):
-                    rg = md.row_group(g)
-                    if rg.num_rows == 0:
-                        continue
-                    st = rg.column(ci).statistics
-                    if (st is None or not st.has_min_max
-                            or rg.num_rows > self._POINT_RG_MAX_ROWS):
-                        ok = False
-                        break
-                    entries.append((int(st.min), int(st.max), f, g))
-                if not ok:
-                    break
+            per_file = self._file_memo("docs_rg", ds.files, self._rg_entries)
+            ok = all(e is not None for e in per_file)
+            entries = [e for es in per_file if es for e in es]
             if ok and entries:
                 entries.sort(key=lambda e: (e[0], e[1]))
                 mins = [e[0] for e in entries]
@@ -1751,6 +1770,40 @@ class SearchEngine:
                 out = (mins, cum, entries)
         self._pa_cache["__docs_rg__"] = out
         return None if out == "n/a" else out
+
+    def _rg_entries(self, f: str) -> list | None:
+        """(min_doc_id, max_doc_id, f, group_idx) per non-empty row group
+        of docs file ``f``; None when a group lacks doc_id stats or is
+        oversized."""
+        import pyarrow.parquet as pq
+
+        try:
+            md = pq.read_metadata(f)
+            names = [md.schema.column(i).name for i in range(md.num_columns)]
+            ci = names.index("doc_id")
+        except Exception:
+            return None
+        entries = []
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            if rg.num_rows == 0:
+                continue
+            st = rg.column(ci).statistics
+            if (st is None or not st.has_min_max
+                    or rg.num_rows > self._POINT_RG_MAX_ROWS):
+                return None
+            entries.append((int(st.min), int(st.max), f, g))
+        return entries
+
+    def _file_memo(self, kind: str, files, read) -> list:
+        """``read(f)`` for each published file, remembered across
+        refresh(): a published file is never rewritten in place (a
+        segment rewrite or a compact writes new names), so an append
+        costs reads of its new files only."""
+        memo = self._per_file.get(kind, {})
+        out = {f: memo[f] if f in memo else read(f) for f in files}
+        self._per_file[kind] = out  # forgets files no longer listed
+        return list(out.values())
 
     def _docs_point_table(self, need: list[int], names: list[str]):
         """Arrow table of exactly the ``need`` doc rows via per-hit
@@ -1822,7 +1875,6 @@ class SearchEngine:
         doc_id IN point scan (min/max-pruned on the doc_id-sorted docs
         table — no full scan, no gate: the hits are already collected so
         the point path costs no extra action here)."""
-        docs = self.documents()
         if (len(hits) <= self._POINT_FETCH_MAX_K
                 and self._pa_dataset("docs") is not None):
             # embedded point fetch: read exactly the hit rows through
@@ -1835,8 +1887,12 @@ class SearchEngine:
             import pyarrow.dataset as pads
             from pyspark.sql.types import DoubleType, StructField, StructType
 
-            cols = self._ranked_cols(docs, sel)
-            by_name = {fld.name: fld for fld in docs.schema.fields}
+            # the schema alone: after refresh() a new Spark reader would
+            # list every segment dir and infer the schema (a job)
+            if self._docs_schema is None:
+                self._docs_schema = self.documents().schema
+            cols = self._ranked_cols(self._docs_schema.names, sel)
+            by_name = {fld.name: fld for fld in self._docs_schema.fields}
             schema = StructType([by_name[c] for c in cols]
                                 + [StructField("score", DoubleType())])
             if not hits:
@@ -1866,6 +1922,7 @@ class SearchEngine:
                 ascending=[False, True, True], kind="mergesort",
             )[cols + ["score"]]
             return self.spark.createDataFrame(pdf, schema=schema)
+        docs = self.documents()
         lit = self.spark.createDataFrame(
             [(int(d), float(s)) for d, s in hits],
             "doc_id long, score double",

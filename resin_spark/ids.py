@@ -43,7 +43,9 @@ def build_conv_dim(transcripts: DataFrame) -> DataFrame:
     """Dense conv_id -> conv_slot dimension (deterministic: slot = rank of
     conv_id under lexicographic order)."""
     spark = transcripts.sparkSession
-    convs = transcripts.select("conv_id").distinct().sort("conv_id")
+    # null conv_ids never join (with_doc_id is an inner join), and the
+    # dimension's conv_id is non-nullable
+    convs = transcripts.select("conv_id").dropna().distinct().sort("conv_id")
     rdd = convs.rdd.map(lambda r: r[0]).zipWithIndex()
     return spark.createDataFrame(rdd, schema=CONV_DIM_SCHEMA)
 

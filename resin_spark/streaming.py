@@ -9,10 +9,11 @@ this module implements it:
 
     transcripts stream (file source / rate / kafka)
       -> writeStream.foreachBatch(index_microbatch)
-           each micro-batch builds ONE index segment (build._build_segment
-           machinery: tf -> dl -> stats -> encoded posting blocks) and
-           appends it with a lineage receipt; queries see it on the next
-           postings read (segment dirs are just partitions).
+           each micro-batch builds ONE index segment (build.append_segment:
+           in-process for small batches on a driver-visible root, else
+           the distributed _build_segment) and appends it with a lineage
+           receipt; queries see it on the next postings read (segment
+           dirs are just partitions).
 
 Semantics and scale:
 * segment id = micro-batch epoch offset by a base: append-only, no
@@ -20,8 +21,8 @@ Semantics and scale:
   checkpoint (a replayed batch overwrites its own segment dir —
   idempotent by construction since the segment id is the batch id).
 * conv_dim growth: new conv_ids get slots ABOVE the current maximum
-  (append-only dimension).  Slots are assigned within the micro-batch by
-  the same distributed sort+zipWithIndex as the batch build — stable
+  (append-only dimension).  Slots are assigned within the micro-batch
+  in sorted conv_id order, as the batch build assigns them — stable
   as long as each conversation arrives within one micro-batch (the
   transcript producer's natural unit).  Cross-batch turns of a known
   conv_id reuse its existing slot via the anti-join.
@@ -46,32 +47,26 @@ def index_microbatch(root: str, fields: tuple[str, ...] = B.DEFAULT_FIELDS,
                      segment_base: int = 1000,
                      write_doclens: bool | None = None):
     """foreachBatch callback factory: each micro-batch becomes one index
-    segment (idempotent on replay: segment id = base + batch id).
+    segment (idempotent on replay: segment id = base + batch id, and a
+    replay rewrites that segment).
 
-    ``write_doclens=None`` auto-detects: if the index root already carries
-    the doclens artifact, streamed segments keep writing it — otherwise a
-    later compact would merge a doclens table covering only the
-    pre-streaming docs."""
+    Segments are written by build.append_segment, the same entry as
+    api.append_docs: a micro-batch of at most
+    build.DRIVER_APPEND_MAX_ROWS rows and 8 MiB of Arrow data for a
+    driver-visible root is written in-process with pyarrow; larger ones
+    and remote roots run the distributed segment build.  Streamed
+    segments keep the index's positional layout.
+    ``write_doclens=None`` auto-detects: if the
+    index root already carries the doclens artifact, streamed segments
+    keep writing it — otherwise a later compact would merge a doclens
+    table covering only the pre-streaming docs."""
 
     def _fn(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        spark = batch.sparkSession
-        dl = write_doclens
-        if dl is None:
-            dl = B._exists(spark, B.p_doclens(root))
-        conv_dim = extend_conv_dim(spark, batch, root)
-        seg = segment_base + int(batch_id)
-        seg_df = batch.withColumn("segment", F.lit(seg))
-        # like doclens: streamed segments keep the existing index's
-        # physical layout (positional collections stay positional)
-        try:
-            positions = "positions_bin" in B.read_postings(
-                spark, root).columns
-        except Exception:
-            positions = False
-        B._build_segment(spark, seg_df, conv_dim, root, fields, seg,
-                         write_doclens=dl, positions=positions)
+        B.append_segment(batch.sparkSession, batch, root,
+                         segment_base + int(batch_id), fields,
+                         write_doclens=write_doclens)
 
     return _fn
 

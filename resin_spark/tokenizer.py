@@ -26,6 +26,7 @@ retrieval stays testable without infecting BM25 ranking.
 
 from __future__ import annotations
 
+import re
 import unicodedata
 
 import pandas as pd
@@ -34,6 +35,7 @@ from pyspark.sql import functions as F
 
 # Java regex (Spark split/regexp functions run JVM-side).
 TOKEN_SEP_JAVA = r"[^\p{L}\p{N}]+"
+_ASCII_TOKEN = re.compile(r"[a-z0-9]+")
 
 
 def _is_alnum(ch: str) -> bool:
@@ -50,17 +52,20 @@ def tokenize_py(text: str | None) -> list[str]:
     split into maximal alnum runs — mirrors BagOfCharsModel.cs:30-34."""
     if not text:
         return []
+    # lowercase the WHOLE string, as the JVM's lower() does: a per-char
+    # lower() misses context rules such as Greek final sigma (ΟΔΟΣ ->
+    # οδος), and the index is built with the JVM tokens
+    low = text.lower()
+    if low.isascii():  # L*/N* of lowercased ASCII is exactly [a-z0-9]
+        return _ASCII_TOKEN.findall(low)
     out: list[str] = []
     run: list[str] = []
-    for ch in text:
-        lch = ch.lower()
-        for c in lch:  # str.lower can expand (e.g. İ) — keep per-char
-            if _is_alnum(c):
-                run.append(c)
-            else:
-                if run:
-                    out.append("".join(run))
-                    run = []
+    for c in low:
+        if _is_alnum(c):
+            run.append(c)
+        elif run:
+            out.append("".join(run))
+            run = []
     if run:
         out.append("".join(run))
     return out

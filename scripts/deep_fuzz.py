@@ -6,14 +6,17 @@ The seeded 24-query family in tests/test_differential.py runs on the
 routes exercise their bound logic against a degenerate block structure.
 This script is the scaled-up verification pass: a 16k-conversation Zipf
 corpus (4 posting blocks, skewed df, dl spread, block-localized bursts —
-fixtures.transcripts_df_zipf) and hundreds of random boolean trees with
+fixtures.transcripts_df_zipf; its last eighth appended as a second
+segment) and hundreds of random boolean trees with
 random k/skip paging, each checked rank- AND score-identical (1e-9)
 against resin_spark.reference.oracle_search under every strategy, plus
 warm repeats (term/stats LRU paths) and a phrase-query family.
 
 Usage: python scripts/deep_fuzz.py [n_queries] [seed] [n_convs]
-Defaults: 300 queries, seed 20260820, 16384 convs.  Exits non-zero on
-the first mismatch with the reproducing (seed, qid, strategy, query).
+Defaults: 300 queries, seed 20260820, 16384 convs.  Runs local[N] with
+N shuffle partitions, N = $SPARK_GRAFT_CPUS or the host's core count.
+Exits non-zero on the first mismatch with the reproducing (seed, qid,
+strategy, query).
 """
 
 from __future__ import annotations
@@ -62,16 +65,29 @@ def main() -> int:
     seed = int(sys.argv[2]) if len(sys.argv) > 2 else 20260820
     n_convs = int(sys.argv[3]) if len(sys.argv) > 3 else 16384
 
+    from pyspark.sql import functions as F
+
+    from resin_spark.api import append_docs
     from resin_spark.build import build_index
     from resin_spark.executor import SearchEngine
 
-    spark = make_session("local[32]", "deep_fuzz", shuffle_partitions=32)
+    # one task slot and one shuffle partition per host core: more slots
+    # than cores only adds scheduling overhead
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+    spark = make_session(f"local[{cores}]", "deep_fuzz",
+                         shuffle_partitions=cores)
     spark.sparkContext.setLogLevel("ERROR")
     tmp = tempfile.mkdtemp(prefix="deep_fuzz_")
     root = f"{tmp}/idx"
     t0 = time.monotonic()
     t = transcripts_df_zipf(spark, n_convs=n_convs, max_turns=3)
-    build_index(spark, t, root, write_doclens=True)
+    # a mixed index: the last eighth of the conversations is appended as
+    # its own segment (by the driver-side writer while it fits
+    # DRIVER_APPEND_MAX_ROWS).  Its conv_ids sort last, so every doc_id
+    # equals the one a single build assigns.
+    cut = F.col("conv_id") < f"conv{n_convs - n_convs // 8:08d}"
+    build_index(spark, t.filter(cut), root, write_doclens=True)
+    append_docs(spark, t.filter(~cut), root)
     rows = [r.asDict() for r in t.collect()]
     oracle = build_oracle_index(rows)
     print(f"corpus {len(rows)} turns, index+oracle built "

@@ -3,8 +3,7 @@
 Runs the contract build (parquet table -> index) at pinned 1 and 4 cores
 for each named variant, interleaved trials, and prints turns/sec +
 scaling efficiency per variant.  Variants are Spark-conf-only so the
-shipped code path stays single-source; code-level variants (e.g. int32
-dl) are toggled via env read by resin_spark.build.
+shipped code path stays single-source.
 
 Usage: python scripts/scaling_experiments.py [target_turns] [trials] [variant ...]
 Defaults: 10_000_000 turns, 2 trials, all variants.
@@ -36,10 +35,6 @@ VARIANTS: dict[str, dict] = {
     # zstd shuffle: ~30% fewer bytes through the page cache at some CPU
     # cost — trades CPU (scales) for DRAM bandwidth (doesn't)
     "zstd_shuffle": {"conf": {"spark.io.compression.codec": "zstd"}},
-    # dictionary-encode the term column pre-shuffle (int64 ids through
-    # the sorter/Arrow/encoder instead of strings) — shrinks the
-    # encoder-stage working set, the DRAM hog in the stage breakdown
-    "termdict": {"env": {"RESIN_SPARK_TERM_DICT": "1"}},
 }
 
 
@@ -71,8 +66,7 @@ print("RESULT " + json.dumps({{"tps": out["turns"] / wall}}))
 spark.stop()
 """
     p = subprocess.run(_pin(cores) + [sys.executable, "-c", code],
-                       capture_output=True, text=True, timeout=5400,
-                       env={**os.environ, **variant.get("env", {})})
+                       capture_output=True, text=True, timeout=5400)
     for line in p.stdout.splitlines():
         if line.startswith("RESULT "):
             return json.loads(line[len("RESULT "):])["tps"]

@@ -69,6 +69,44 @@ def engine(spark, index_root):
     return SearchEngine(spark, index_root)
 
 
+@pytest.fixture(scope="session")
+def mixed_index_root(spark, transcripts, tmp_path_factory):
+    """The fixture corpus as a mixed index: conversations 0-19 from the
+    Spark build, then 20-29 and 30-39 appended as two segments by the
+    driver-side segment writer (append_docs' small-batch route)."""
+    from pyspark.sql import functions as F
+
+    from resin_spark.api import append_docs
+    from resin_spark.build import build_index
+
+    root = str(tmp_path_factory.mktemp("mixed") / "collection")
+    cid = F.col("conv_id")
+    build_index(spark, transcripts.filter(cid < "conv00000020"), root,
+                write_doclens=True)
+    for lo, hi in (("conv00000020", "conv00000030"),
+                   ("conv00000030", "conv99999999")):
+        seg = append_docs(spark, transcripts.filter((cid >= lo) & (cid < hi)),
+                          root)["segment"]
+        # the Spark writer leaves a _SUCCESS marker, the driver one none
+        assert not os.path.exists(f"{root}/docs/segment={seg}/_SUCCESS")
+    yield root
+    shutil.rmtree(root, ignore_errors=True)
+
+
+@pytest.fixture(scope="session")
+def mixed_engine(spark, mixed_index_root):
+    from resin_spark.executor import SearchEngine
+
+    return SearchEngine(spark, mixed_index_root)
+
+
+@pytest.fixture(params=STRATEGIES)
+def mixed_engine_s(request, mixed_engine):
+    """engine_s over mixed_index_root."""
+    with forced_strategy(mixed_engine, request.param):
+        yield mixed_engine
+
+
 @pytest.fixture(params=STRATEGIES)
 def engine_s(request, engine):
     """The same engine under all six physical strategies (described in

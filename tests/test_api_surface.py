@@ -2,6 +2,8 @@
 multi-collection search (X9), flat programmatic parse (Q1), sources
 (S4/S6)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -282,15 +284,41 @@ def test_append_docs_explicit_segment_is_idempotent(spark, tmp_path):
     from resin_spark.fixtures import transcripts_df
     from pyspark.sql import functions as F
 
+    import glob
+    import shutil
+
     t = transcripts_df(spark, n_convs=10, max_turns=3)
     w1 = t.filter(F.col("conv_id") < "conv00000005")
     w2 = t.filter(F.col("conv_id") >= "conv00000005")
     root = str(tmp_path / "idem_idx")
     B.build_index(spark, w1, root)
 
+    # leftovers of an earlier attempt that died before its receipt: a
+    # hidden half-written file (in segment 0 too) and a published part
+    # file holding segment 0's docs again
+    for art in ("docs", "postings"):
+        for seg in (0, APPEND_SEGMENT_BASE):
+            d = f"{root}/{art}/segment={seg}"
+            os.makedirs(d, exist_ok=True)
+            with open(f"{d}/.part-dead.parquet", "wb") as f:
+                f.write(b"PAR1 half-written")
+    stale = glob.glob(f"{root}/docs/segment=0/part-*.parquet")[0]
+    shutil.copy(stale, f"{root}/docs/segment={APPEND_SEGMENT_BASE}/"
+                "part-stale.parquet")
+    shutil.rmtree(f"{root}/postings/segment={APPEND_SEGMENT_BASE}")
+    os.makedirs(f"{root}/postings/segment={APPEND_SEGMENT_BASE}")
+    # hidden files are skipped by both readers
+    n1 = w1.count()
+    assert spark.read.parquet(f"{root}/postings").count() > 0
+    assert SearchEngine(spark, root).topk({"or": {"text": "apple"}}, k=3)
+
     first = append_docs(spark, w2, root, segment=APPEND_SEGMENT_BASE)
     assert first == {"segment": APPEND_SEGMENT_BASE}
     n = SearchEngine(spark, root).documents().count()
+    assert n == n1 + w2.count() == t.count()
+    seg_dir = f"{root}/docs/segment={APPEND_SEGMENT_BASE}"
+    assert not os.path.exists(f"{seg_dir}/part-stale.parquet")
+    assert not os.path.exists(f"{seg_dir}/.part-dead.parquet")
     retry = append_docs(spark, w2, root, segment=APPEND_SEGMENT_BASE)
     assert retry["skipped"] is True
     assert SearchEngine(spark, root).documents().count() == n == t.count()

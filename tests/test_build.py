@@ -78,33 +78,3 @@ def test_lineage_written(spark, engine):
     met = spark.read.parquet(B.p_metrics(engine.root))
     metrics = {r["metric"] for r in met.collect()}
     assert {"n_docs", "docs_per_sec"} <= metrics
-
-
-def test_term_dict_build_parity(spark, transcripts, index_root, tmp_path, monkeypatch):
-    """RESIN_SPARK_TERM_DICT=1 (dictionary-encoded term shuffle, the
-    BENCH.md scaling variant) must produce a byte-identical postings
-    table — same rows, same chars_key — and keep every posting file
-    (field, term)-sorted (the dense id is rank-ordered, so sorting by id
-    IS sorting by the string)."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    monkeypatch.setenv("RESIN_SPARK_TERM_DICT", "1")
-    root2 = str(tmp_path / "idx_dict")
-    B.build_index(spark, transcripts, root2)
-    monkeypatch.delenv("RESIN_SPARK_TERM_DICT")
-
-    cols = [f.name for f in B.POSTINGS_FIELDS]
-    want = sorted(
-        spark.read.parquet(B.p_postings(index_root)).select(*cols).collect()
-    )
-    got = sorted(spark.read.parquet(B.p_postings(root2)).select(*cols).collect())
-    assert got == want
-
-    files = glob.glob(f"{B.p_postings(root2)}/segment=*/part-*.parquet")
-    assert files
-    for f in files:
-        t = pq.read_table(f, columns=["field", "term"])
-        pairs = list(zip(t["field"].to_pylist(), t["term"].to_pylist()))
-        assert pairs == sorted(pairs)

@@ -45,6 +45,14 @@ def test_phrase_matches_oracle_all_strategies(engine_s, fixture_rows, oracle):
         _assert_hits(got, want, phrase)
 
 
+def test_phrase_matches_oracle_mixed_index(mixed_engine_s, fixture_rows,
+                                           oracle):
+    """The same on an index mixing Spark-built and driver-appended
+    segments."""
+    test_phrase_matches_oracle_all_strategies(mixed_engine_s, fixture_rows,
+                                              oracle)
+
+
 def test_phrase_is_strict_subset_of_and(engine, fixture_rows, oracle):
     """Adjacency must actually prune: the phrase result is a proper
     subset of the bag-AND result on a phrase whose terms co-occur

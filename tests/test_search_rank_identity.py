@@ -77,6 +77,13 @@ def test_rank_identity(engine_s, oracle, qid, query, kw):
     _assert_rank_identical(got, want, qid)
 
 
+@pytest.mark.parametrize("qid,query,kw", QUERIES, ids=[q[0] for q in QUERIES])
+def test_rank_identity_mixed_index(mixed_engine_s, oracle, qid, query, kw):
+    """Same ranks and scores on an index whose segments were written by
+    both the Spark build and the driver-side append writer."""
+    test_rank_identity(mixed_engine_s, oracle, qid, query, kw)
+
+
 def test_q18_select_projection(engine, oracle):
     """q18: select=[conv_id, turn_idx, role] projection."""
     df = engine.search({"or": {"text": "apple"}}, k=10,

@@ -20,6 +20,17 @@ CASES = [
     ("UPPER lower MiXeD", ["upper", "lower", "mixed"]),
     ("tool:search(arg=1)", ["tool", "search", "arg", "1"]),
     ("émigré café", ["émigré", "café"]),
+    # Greek final sigma: lowercasing is whole-string (context-sensitive)
+    ("ΟΔΟΣ", ["οδος"]),
+    ("ΣΑΣ", ["σας"]),
+    ("aΣ bΣc", ["aς", "bσc"]),
+]
+
+# Strings whose lowercase is context-sensitive, expands or leaves the
+# ASCII/Latin-1 range: the JVM tokens must equal tokenize_py on each.
+PROBES = [
+    "ΟΔΟΣ", "ΣΑΣ", "aΣ bΣc", "ΣΑΣ.", "Σ", "aΣ1", "ΌΣΟΣ", "Σ̈a",
+    "İstanbul", "ẞ straße", "ﬁle", "Ⅻ ⅻ", "１２３ ＡＢＣ", "ǅungla", ENDASH,
 ]
 
 
@@ -40,6 +51,9 @@ def test_tokens_col_matches_py(spark):
     )
     rows = df.select("i", tokens_col("text").alias("toks")).orderBy("i").collect()
     assert [r["toks"] for r in rows] == [c[1] for c in CASES]
+    df = spark.createDataFrame(list(enumerate(PROBES)), "i int, text string")
+    rows = df.select("i", tokens_col("text").alias("toks")).orderBy("i").collect()
+    assert [r["toks"] for r in rows] == [tokenize_py(s) for s in PROBES]
 
 
 def test_chars_key_anagrams(spark):
