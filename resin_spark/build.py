@@ -173,18 +173,10 @@ def _default_fs_is_local() -> bool:
 def _current_pointer(root: str) -> tuple[int, dict]:
     """(version, artifact-dir mapping) from the newest _ptr file."""
     import json as _json
-    import os as _os
 
     local = _local_dir(root)
     if local is not None:
-        import glob as _glob
-
-        ptrs = sorted(_glob.glob(_os.path.join(local, "_ptr_*.json")))
-        if not ptrs:
-            return 0, {}
-        with open(ptrs[-1]) as f:
-            doc = _json.load(f)
-        return doc["version"], doc["dirs"]
+        return _local_pointer(local)
     from pyspark.sql import SparkSession
 
     spark = SparkSession.getActiveSession()
@@ -206,6 +198,19 @@ def _current_pointer(root: str) -> tuple[int, dict]:
     finally:
         stream.close()
     doc = _json.loads(data.decode())
+    return doc["version"], doc["dirs"]
+
+
+def _local_pointer(local: str) -> tuple[int, dict]:
+    """_current_pointer of a root at driver path ``local``."""
+    import glob as _glob
+    import json as _json
+
+    ptrs = sorted(_glob.glob(os.path.join(local, "_ptr_*.json")))
+    if not ptrs:
+        return 0, {}
+    with open(ptrs[-1]) as f:
+        doc = _json.load(f)
     return doc["version"], doc["dirs"]
 
 
@@ -916,29 +921,11 @@ _STATS_ARROW, _DOCLENS_ARROW = _driver_schemas()
 
 
 def completed_segments(spark: SparkSession, root: str) -> set[int]:
-    local = _local_dir(p_lineage(root))
-    if local is not None:
-        import pyarrow.dataset as pads
+    from resin_spark.reader import open_reader
 
-        try:
-            lin = pads.dataset(local, format="parquet").to_table(
-                columns=["segment"],
-                filter=(pads.field("step") == "segment")
-                & (pads.field("status") == "complete"))
-        except Exception:
-            return set()
-        return set(lin["segment"].to_pylist())
-    try:
-        lin = spark.read.parquet(p_lineage(root))
-    except Exception:
-        return set()
-    rows = (
-        lin.filter((F.col("step") == "segment") & (F.col("status") == "complete"))
-        .select("segment")
-        .distinct()
-        .collect()
-    )
-    return {r.segment for r in rows}
+    lin = open_reader(spark, root).read(
+        "lineage", ["segment"], {"step": "segment", "status": "complete"})
+    return set(lin["segment"].to_pylist())
 
 
 # ---------------------------------------------------------------- build
@@ -1161,18 +1148,10 @@ def _postings_positional(spark: SparkSession, root: str) -> bool | None:
     """Whether the existing postings table is positional, or None when
     there is none (a new collection, or one whose index was truncated:
     lineage receipts survive truncate_index, so they cannot decide)."""
-    local = _local_dir(p_postings(root))
-    try:
-        if local is not None:
-            import pyarrow.dataset as pads
+    from resin_spark.reader import open_reader
 
-            ds = pads.dataset(local, format="parquet", partitioning="hive")
-            return "positions_bin" in ds.schema.names if ds.files else None
-        if not _exists(spark, p_postings(root)):
-            return None
-        return "positions_bin" in read_postings(spark, root).columns
-    except Exception:
-        return None  # unreadable/empty postings dir: treat as new
+    schema = open_reader(spark, root).schema("postings")
+    return None if schema is None else "positions_bin" in schema.names
 
 
 def append_segment(spark: SparkSession, batch: DataFrame, root: str,

@@ -33,13 +33,13 @@ from __future__ import annotations
 
 import json
 import math
-import os
 from functools import reduce as _functools_reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from resin_spark import build as B
+from resin_spark import reader as R
 from resin_spark.query import Query, parse_query, query_terms
 from resin_spark.tokenizer import chars_key_py
 
@@ -95,21 +95,34 @@ class _BoundedLRU:
         return key in self._d
 
 
-def _decode_merged(rows):
-    """Decode posting-block rows of ONE (field, term) key into its
-    sorted-unique ``(doc_id, tf, dl)`` int64 arrays.  Rows from several
-    segments may hold the same doc: tf sums over them, dl takes the max
-    (surface mode has one row per (doc, key), so both are identity).
-    The decoders are looked up on the postings module at call time, so
-    anything that wraps them there sees every decode."""
+def _by_key(tbl) -> dict:
+    """The rows of an Arrow table of posting blocks per (field, term)
+    key: ``{key: sub-table}``."""
+    rows: dict = {}
+    for i, key in enumerate(zip(tbl.column("field").to_pylist(),
+                                tbl.column("term").to_pylist())):
+        rows.setdefault(key, []).append(i)
+    return {key: tbl.take(ix) for key, ix in rows.items()}
+
+
+def _decode_merged(tbl):
+    """Decode the posting blocks of ONE (field, term) key (an Arrow table
+    with the ``*_bin`` columns) into its sorted-unique ``(doc_id, tf,
+    dl)`` int64 arrays.  Rows from several segments may hold the same
+    doc: tf sums over them, dl takes the max (surface mode has one row
+    per (doc, key), so both are identity).  The decoders are looked up
+    on the postings module at call time, so anything that wraps them
+    there sees every decode."""
     import numpy as np
 
     from resin_spark import postings as P
 
-    ids = np.concatenate(
-        [P.decode_doc_ids(bytes(r["doc_ids_bin"])) for r in rows])
-    tfs = np.concatenate([P.decode_counts(bytes(r["tfs_bin"])) for r in rows])
-    dls = np.concatenate([P.decode_counts(bytes(r["dls_bin"])) for r in rows])
+    def dec(col, fn):
+        return np.concatenate([fn(b) for b in tbl.column(col).to_pylist()])
+
+    ids = dec("doc_ids_bin", P.decode_doc_ids)
+    tfs = dec("tfs_bin", P.decode_counts)
+    dls = dec("dls_bin", P.decode_counts)
     uid, inv = np.unique(ids, return_inverse=True)
     tf = np.zeros(len(uid), dtype=np.int64)
     np.add.at(tf, inv, tfs)
@@ -129,19 +142,22 @@ class SearchEngine:
         commit; see build.list_snapshots).  None = follow the newest
         pointer, re-resolved per cached reader as today.
 
-        ``io_mode='auto'`` enables EMBEDDED reads: when the index root is
-        driver-visible (local filesystem), the size-gated driver-scored
-        strategy reads posting blocks, the term-df mirror, and the top-k
-        point fetch through pyarrow directly — zero Spark jobs on the
-        warm query path.  This is the literal analog of the reference's
-        embedded read session (SessionFactory caches ColumnReaders over
-        local streams and ReadSession scores in-process,
-        /root/reference/src/Sir.Search/Session/SearchSession.cs:34-46) —
-        re-expressed as one more size-gated physical strategy: remote
-        roots (hdfs://, s3://) or ``io_mode='spark'`` route every read
-        through Spark exactly as before, and the distributed fold remains
-        the only path above the driver caps.  All strategies are
-        rank-identity-tested against each other and the oracle."""
+        ``io_mode`` selects only the backend of the driver-side reads
+        (reader.py): every one of them — posting blocks, docs rows, stats
+        — is one ``read(artifact, columns, where)`` returning an Arrow
+        table.  'auto' reads through pyarrow when the root is
+        driver-visible (build._local_dir): zero Spark jobs on the warm
+        query path, the analog of the reference's embedded read session
+        (SessionFactory caches ColumnReaders over local streams and
+        ReadSession scores in-process, SearchSession.cs:34-46).  A remote
+        root (hdfs://, s3://) or 'spark' reads through the engine's
+        Spark readers with ``filter().select().toArrow()``.  The backend
+        is chosen here and in refresh().  Both backends run the same
+        strategies, except that the block-max decode, the embedded
+        term-df mirror and the targeted docs point read need the pyarrow
+        dataset; the distributed fold remains the only path above the
+        driver caps.  All strategies are rank-identity-tested against
+        each other and the oracle."""
         from resin_spark.session import ensure_package_shipped
 
         ensure_package_shipped(spark)
@@ -164,10 +180,12 @@ class SearchEngine:
         # kept across refresh(): published files are immutable, so after
         # an append only the new files are read and their df added
         self._term_df_base: tuple | None = None
-        # per-file footer/stats reads, also kept across refresh()
+        # per-file footer reads and the stats read, also kept across
+        # refresh() (the reader's memo)
         self._per_file: dict = {}
         self._docs_size: int | None = None
-        self._pa_cache: dict = {}
+        # row-group directory of the docs files (_docs_rg_index)
+        self._docs_rg = None
         # decoded-postings LRU: (field, term) -> (uid, tf, dl) numpy
         # arrays, bounded by total postings (_TERM_LRU_MAX_POSTINGS ≈
         # 24 B/posting decoded).  The driver-side analog of the
@@ -194,6 +212,7 @@ class SearchEngine:
         self._pos_lru = _BoundedLRU(self._POS_LRU_MAX_OCC)
         self.last_and_stats: dict = {}
         self.last_blockmax_stats: "dict | None" = None
+        self._pick_reader()
 
     _TERM_LRU_MAX_POSTINGS = 4_000_000  # ~100 MB decoded
     _POS_LRU_MAX_OCC = 4_000_000  # ~64 MB decoded occurrence rows
@@ -204,61 +223,14 @@ class SearchEngine:
     # instead (the mirror itself stays gated by _TERM_DF_DRIVER_MAX_ROWS)
     _PA_TERM_DIR_MAX_BLOCK_ROWS = 5_000_000
 
-    @staticmethod
-    def _local_path(p: str) -> str | None:
-        """Driver-visible directory for ``p`` (build._local_dir, and the
-        directory must exist), else None — the embedded-IO eligibility
-        check."""
-        q = B._local_dir(p)
-        return q if q is not None and os.path.isdir(q) else None
-
-    def _pa_dataset(self, name: str):
-        """pyarrow dataset over a local artifact dir, resolved once per
-        engine at the pinned snapshot (same staleness semantics as the
-        cached Spark readers).  None when ineligible: remote root,
-        io_mode='spark', or pyarrow absent."""
-        if self.io_mode != "auto":
-            return None
-        if name not in self._pa_cache:
-            try:
-                import pyarrow.dataset as pads
-            except Exception:
-                self._pa_cache[name] = None
-            else:
-                p = {"postings": B.p_postings, "docs": B.p_docs}[name](
-                    self.root, self.snapshot)
-                lp = self._local_path(p)
-                self._pa_cache[name] = (
-                    pads.dataset(lp, format="parquet", partitioning="hive")
-                    if lp else None
-                )
-        return self._pa_cache[name]
-
-    def _pa_postings_rows(self, filt, cols: tuple) -> "list[dict] | None":
-        """Posting-block rows via the embedded dataset (row-group pruned
-        by parquet stats on the pushed filter), or None when embedded IO
-        is unavailable (caller runs the Spark collect)."""
-        ds = self._pa_dataset("postings")
-        if ds is None:
-            return None
-        tbl = ds.to_table(columns=list(cols), filter=filt)
-        if tbl.num_rows == 0:
-            return []
-        data = [tbl.column(c).to_pylist() for c in cols]
-        return [dict(zip(cols, vals)) for vals in zip(*data)]
-
-    def _pa_filter_terms(self, by_field: dict):
-        """pyarrow filter for the queried (field, term) keys, or None."""
-        if self._pa_dataset("postings") is None:
-            return None
-        import pyarrow.dataset as pads
-
-        expr = None
-        for f, toks in sorted(by_field.items()):
-            e = (pads.field("field") == f) & pads.field("term").isin(
-                sorted(toks))
-            expr = e if expr is None else (expr | e)
-        return expr
+    def _pick_reader(self) -> None:
+        """Choose the read backend (reader.open_reader) from the root and
+        io_mode; the Spark one reads through the engine's cached
+        readers."""
+        self._reader = R.open_reader(
+            self.spark, self.root, self.snapshot, self.io_mode,
+            frames={"docs": self.documents, "postings": self.postings},
+            memo=self._per_file)
 
     # ------------------------------------------------------------ stores
     def documents(self) -> DataFrame:
@@ -311,7 +283,8 @@ class SearchEngine:
         when the vocabulary exceeds _TERM_DF_DRIVER_MAX_ROWS."""
         if not self._term_df_checked:
             self._term_df_checked = True
-            ds = self._pa_dataset("postings")
+            ds = (self._reader.dataset("postings")
+                  if self._reader.name == "pyarrow" else None)
             if ds is not None:
                 import pyarrow.dataset as pads
 
@@ -374,10 +347,11 @@ class SearchEngine:
 
     def refresh(self) -> None:
         """Drop EVERY cached listing/stat after new segments are
-        appended: the Spark readers, the embedded pyarrow datasets
-        (their file listing is materialized eagerly at construction, so
-        an appended segment is invisible to a cached dataset even though
-        the artifact dir is unchanged), and, through clear_cache(), the
+        appended: the Spark readers, the read backend with its pyarrow
+        datasets (their file listing is materialized eagerly at
+        construction, so an appended segment is invisible to a cached
+        dataset even though the artifact dir is unchanged; the backend is
+        chosen again here), and, through clear_cache(), the
         persisted frames and every LRU (a term's postings grow under
         append — a stale LRU hit, or the lru_warm fast path built on it,
         would keep serving the pre-append snapshot).  What was read from
@@ -393,7 +367,8 @@ class SearchEngine:
         if self._term_dir is not None:
             self._term_dir.unpersist()
             self._term_dir = None
-        self._pa_cache.clear()
+        self._docs_rg = None
+        self._pick_reader()
         self.clear_cache()
         if self._term_df_base is not None:
             # embedded engine: rebuild the df mirror, stats and footer
@@ -438,46 +413,19 @@ class SearchEngine:
     # ------------------------------------------------------------ stats
     def stats(self) -> dict[str, dict]:
         """Per-field corpus stats aggregated over segments, driver-side.
-        avgdl = exact-int total_tokens / n_docs (bit-identical to oracle).
-        Embedded IO reads the (tiny, per-segment) stats parquet through
-        pyarrow — int64 sums commute, so the values are identical."""
+        avgdl = exact-int total_tokens / n_docs (bit-identical to oracle)."""
         if self._stats is None:
-            rows: list = []
-            p = B.p_stats(self.root, self.snapshot)
-            lp = self._local_path(p) if self.io_mode == "auto" else None
-            if lp is not None:
-                import pyarrow.dataset as pads
-                import pyarrow.parquet as pq
-
-                files = pads.dataset(lp, format="parquet",
-                                     partitioning="hive").files
-                tot: dict = {}
-                for part in self._file_memo("stats", files, lambda f: (
-                        pq.read_table(f, columns=["field", "total_tokens",
-                                                  "n_docs"]).to_pylist())):
-                    for r in part:
-                        t, n = tot.get(r["field"], (0, 0))
-                        tot[r["field"]] = (t + r["total_tokens"],
-                                           n + r["n_docs"])
-                rows = [{"field": f, "total_tokens": t, "n_docs": n}
-                        for f, (t, n) in tot.items()]
-            else:
-                rows = (
-                    B.read_stats(self.spark, self.root, self.snapshot)
-                    .groupBy("field")
-                    .agg(
-                        F.sum("total_tokens").alias("total_tokens"),
-                        F.sum("n_docs").alias("n_docs"),
-                    )
-                    .collect()
-                )
+            tbl = self._reader.read("stats",
+                                    ["field", "total_tokens", "n_docs"])
+            tot: dict = {}
+            for f, t, n in zip(*(tbl.column(c).to_pylist()
+                                 for c in tbl.column_names)):
+                t0, n0 = tot.get(f, (0, 0))
+                tot[f] = (t0 + t, n0 + n)
             self._stats = {
-                r["field"]: {
-                    "total_tokens": r["total_tokens"],
-                    "n_docs": r["n_docs"],
-                    "avgdl": (r["total_tokens"] / r["n_docs"]) if r["n_docs"] else 0.0,
-                }
-                for r in rows
+                f: {"total_tokens": t, "n_docs": n,
+                    "avgdl": (t / n) if n else 0.0}
+                for f, (t, n) in tot.items()
             }
         return self._stats
 
@@ -519,37 +467,33 @@ class SearchEngine:
         if k:
             ranked = ranked.limit(k)
 
-        docs = self.documents()
         if k and (k + skip) <= self._POINT_FETCH_MAX_K \
                 and self._docs_bytes() > self._POINT_FETCH_MIN_DOCS_BYTES:
             # big-table small-k path: run the TakeOrderedAndProject NOW
             # (the eager semantics of the reference's Search), then fetch
-            # the hit documents via a pushed-down doc_id IN (...) point
-            # scan — min/max row-group pruning on the doc_id-sorted docs
-            # table — instead of a broadcast join that streams the whole
-            # docs table past k rows.  Gated on docs size: below the
-            # threshold the full-scan broadcast join is cheaper than a
-            # second Spark action (measured: the extra action costs
-            # ~0.3-0.5 s while a <4 GiB local scan costs less); above it
-            # the saved scan dominates — at 100 TB this is THE fetch
-            # path.  Identical rows (score carried as a literal frame).
-            hits = ranked.collect()
-            lit = self.spark.createDataFrame(
-                [(int(r["doc_id"]), float(r["score"])) for r in hits],
-                "doc_id long, score double",
-            )
-            if hits:
-                docs = docs.filter(
-                    F.col("doc_id").isin([int(r["doc_id"]) for r in hits])
-                )
-            out = docs.join(F.broadcast(lit), "doc_id")
-        else:
-            # broadcast only when k bounds the ranked side; k=0 ("all",
-            # e.g. save_as CTAS) can be corpus-sized — let Spark pick the
-            # strategy
-            right = F.broadcast(ranked) if k else ranked
-            out = docs.join(right, "doc_id")
-        return self._project_ranked(out, docs, sel)
+            # the hit documents like driver hits (_fetch_hits: a doc_id
+            # IN (...) point read, min/max row-group pruned on the
+            # doc_id-sorted docs table) instead of a broadcast join that
+            # streams the whole docs table past k rows.  Gated on docs
+            # size: below the threshold the full-scan broadcast join is
+            # cheaper than a second Spark action (measured: the extra
+            # action costs ~0.3-0.5 s while a <4 GiB local scan costs
+            # less); above it the saved scan dominates — at 100 TB this
+            # is THE fetch path.
+            return self._fetch_hits(
+                [(int(r["doc_id"]), float(r["score"]))
+                 for r in ranked.collect()], sel)
+        return self._join_docs(ranked, k, sel)
+
+    def _join_docs(self, ranked: DataFrame, k: int,
+                   sel: list[str] | None) -> DataFrame:
+        """The lazy docs join of a ranked (doc_id, score) frame.
+        Broadcast only when k bounds the ranked side; k=0 ("all", e.g.
+        save_as CTAS) can be corpus-sized — let Spark pick the
+        strategy."""
+        docs = self.documents()
+        right = F.broadcast(ranked) if k else ranked
+        return self._project_ranked(docs.join(right, "doc_id"), docs, sel)
 
     @staticmethod
     def _ranked_cols(columns: list[str], sel: list[str] | None) -> list[str]:
@@ -615,24 +559,29 @@ class SearchEngine:
         distributed path reduces (doc, pos - phrase_index) cells with a
         groupBy whose plan contains no docs-table scan (plan-gated).
         Both are rank-identical to the text verify (parity-tested)."""
-        from resin_spark.tokenizer import TOKEN_SEP_JAVA, tokenize_py
+        from resin_spark.tokenizer import (TOKEN_SEP_JAVA, tokenize_pandas,
+                                           tokenize_py)
 
         toks = tokenize_py(phrase)
-        docs = self.documents()
         if not toks:
             return self._fetch_hits([], select)
         q = parse_query({"and": {field: phrase}})
         if len(toks) == 1:
             # single-token phrase == single-term query
             return self.search(q, k=k, skip=skip, select=select)
-        use_pos = "positions_bin" in self.postings().columns
-        pos_hits = self._driver_hits(q, 0, 0) if use_pos else None
-        if use_pos and pos_hits is not None:
-            matched = self._phrase_verify_positions_driver(
-                field, toks, pos_hits)
+        # the layout off the read backend's schema: on the pyarrow
+        # backend no Spark reader is built (after refresh() one would
+        # cost a schema-inference job)
+        use_pos = "positions_bin" in self._reader.schema("postings").names
+        hits = self._driver_hits(q, 0, 0)
+        if hits == []:
+            return self._fetch_hits([], select)
+        if use_pos and hits is not None:
+            matched = self._phrase_verify_positions_driver(field, toks, hits)
             if matched is not None:
                 page = matched[skip:skip + k] if k else matched[skip:]
                 return self._fetch_hits(page, select)
+        needle = " " + " ".join(toks) + " "
         if use_pos:
             # over the driver caps (no driver hits, or the positional
             # collect would not be driver-sized): distributed positional
@@ -640,13 +589,32 @@ class SearchEngine:
             match = self._phrase_match_docs_positional(field, toks)
             if match is not None:
                 ranked = self._ranked(q, "surface")
-                out = docs.join(ranked.join(match, "doc_id"), "doc_id")
-                out = out.orderBy(F.desc("score"), F.asc("doc_id"))
-                if skip:
-                    out = out.offset(skip)
-                if k:
-                    out = out.limit(k)
-                return self._project_ranked(out, docs, select)
+                docs = self.documents()
+                return self._page_ranked(
+                    docs.join(ranked.join(match, "doc_id"), "doc_id"),
+                    docs, k, skip, select)
+        if (hits is not None
+                and len(hits) <= self._PHRASE_POINT_MAX_CANDIDATES):
+            # point-sized candidate set: candidate texts via one doc_id
+            # IN read, adjacency via the pandas tokenizer twin (tested
+            # equal to the JVM token stream).  hits arrive (score desc,
+            # doc_id asc) — the ranking order — so the page is a plain
+            # slice.  BIGGER driver hit lists fall through to the ranked
+            # join below — shipping 100k+ (doc, score) tuples through a
+            # driver-local relation measured 28 s at sf0.1 ("banana
+            # cantalope": ~180k AND candidates), vs ~1 s for the
+            # distributed rescore + one docs scan.
+            tbl = self._reader.read("docs", ["doc_id", field],
+                                    {"doc_id": [d for d, _ in hits]})
+            joined = tokenize_pandas(
+                tbl.column(field).to_pandas().fillna("")).map(
+                lambda ts: " " + " ".join(ts) + " ")
+            ok = set(tbl.column("doc_id").to_numpy()[
+                joined.str.contains(needle, regex=False).to_numpy()
+            ].tolist())
+            matched = [(d, s) for d, s in hits if d in ok]
+            page = matched[skip:skip + k] if k else matched[skip:]
+            return self._fetch_hits(page, select)
         # tokenizer-normalized field: exactly the token stream the index
         # saw, space-joined and space-delimited so containment can't
         # match across token boundaries
@@ -658,52 +626,15 @@ class SearchEngine:
                 " "),
             F.lit(" "),
         )
-        needle = " " + " ".join(toks) + " "
-        adjacent = F.instr(norm, needle) > 0
-        # the positional branch already paid for the driver hits — reuse
-        hits = pos_hits if use_pos else self._driver_hits(q, 0, 0)
-        if hits == []:
-            return self._fetch_hits([], select)
-        if (hits is not None and len(hits) <= self._PHRASE_POINT_MAX_CANDIDATES
-                and self._pa_dataset("docs") is not None):
-            # embedded verify: candidate texts via one pyarrow point
-            # read, adjacency via the pandas tokenizer twin (tested equal
-            # to the JVM token stream), final frame via the job-free
-            # embedded point fetch.  hits arrive (score desc, doc_id asc)
-            # — the ranking order — so the page is a plain slice.
-            import pyarrow.dataset as pads
+        docs = self.documents()
+        out = docs.join(self._ranked(q, "surface"), "doc_id").filter(
+            F.instr(norm, needle) > 0)
+        return self._page_ranked(out, docs, k, skip, select)
 
-            from resin_spark.tokenizer import tokenize_pandas
-
-            tbl = self._pa_dataset("docs").to_table(
-                columns=["doc_id", field],
-                filter=pads.field("doc_id").isin([int(d) for d, _ in hits]),
-            )
-            pdf = tbl.to_pandas()
-            joined = tokenize_pandas(pdf[field].fillna("")).map(
-                lambda ts: " " + " ".join(ts) + " ")
-            ok = set(pdf.loc[joined.str.contains(needle, regex=False),
-                             "doc_id"].astype("int64"))
-            matched = [(d, s) for d, s in hits if int(d) in ok]
-            page = matched[skip:skip + k] if k else matched[skip:]
-            return self._fetch_hits(page, select)
-        if (hits is not None
-                and len(hits) <= self._PHRASE_POINT_MAX_CANDIDATES):
-            # point-sized candidate set: k-row literal + pushed doc_id IN
-            # scan.  BIGGER driver hit lists fall through to the ranked
-            # join below — shipping 100k+ (doc, score) tuples through a
-            # driver-local relation measured 28 s at sf0.1 ("banana
-            # cantalope": ~180k AND candidates), vs ~1 s for the
-            # distributed rescore + one docs scan.
-            lit = self.spark.createDataFrame(
-                [(int(d), float(s)) for d, s in hits],
-                "doc_id long, score double")
-            cand = docs.filter(
-                F.col("doc_id").isin([int(d) for d, _ in hits]))
-            out = cand.join(F.broadcast(lit), "doc_id").filter(adjacent)
-        else:
-            ranked = self._ranked(q, "surface")
-            out = docs.join(ranked, "doc_id").filter(adjacent)
+    def _page_ranked(self, out: DataFrame, docs: DataFrame, k: int,
+                     skip: int, select: list[str] | None) -> DataFrame:
+        """Page (skip, k) of ranked docs rows in (score desc, doc_id asc)
+        order, projected."""
         out = out.orderBy(F.desc("score"), F.asc("doc_id"))
         if skip:
             out = out.offset(skip)
@@ -753,38 +684,19 @@ class SearchEngine:
                 pos_cached[t] = got
             else:
                 miss.append(t)
-        cols = ("term", "sum_tf", "doc_ids_bin", "tfs_bin",
-                "positions_bin")
-        rows = []
-        if miss:
-            rows = None
-            if self._pa_dataset("postings") is not None:
-                import pyarrow.dataset as pads
-
-                pa_f = (pads.field("field") == field) & pads.field(
-                    "term").isin(miss)
-                if blist is not None:
-                    pa_f = pa_f & pads.field("block_id").isin(blist)
-                try:
-                    rows = self._pa_postings_rows(pa_f, cols)
-                except Exception:
-                    # mixed-layout dataset whose discovered schema lacks
-                    # the positions column — read through Spark (nulls
-                    # surface there and trigger the text-verify fallback
-                    # below)
-                    rows = None
-            if rows is None:
-                pred = (F.col("field") == field) & F.col("term").isin(miss)
-                if blist is not None:
-                    pred = pred & F.col("block_id").isin(blist)
-                rows = self.postings().filter(pred).select(*cols).collect()
-        per_tok: dict[str, list] = {t: [] for t in miss}
+        per_tok: dict = {}
         total_pos = 0
-        for r in rows:
-            if r["positions_bin"] is None:
+        if miss:
+            where = {"field": field, "term": miss}
+            if blist is not None:
+                where["block_id"] = blist
+            tbl = self._reader.read(
+                "postings", ("field", "term", "sum_tf", "doc_ids_bin",
+                             "tfs_bin", "positions_bin"), where)
+            if tbl.column("positions_bin").null_count:
                 return None  # mixed non-positional segment
-            total_pos += r["sum_tf"]
-            per_tok[r["term"]].append(r)
+            per_tok = {t: sub for (_, t), sub in _by_key(tbl).items()}
+            total_pos = sum(tbl.column("sum_tf").to_pylist())
         if total_pos > self._PHRASE_POS_MAX_POSITIONS:
             # decoded occurrence volume (Σ tf, i.e. positions, can far
             # exceed Σ df for a hot term in long docs) would not be
@@ -800,17 +712,18 @@ class SearchEngine:
             if t in pos_cached:
                 drep, pos = pos_cached[t]
             else:
-                if not per_tok[t]:
+                if t not in per_tok:
                     return []  # phrase token absent from candidate blocks
                 dparts, pparts = [], []
                 ndocs = 0
-                for r in per_tok[t]:
-                    tfs = decode_counts(bytes(r["tfs_bin"]))
-                    ids = decode_doc_ids(bytes(r["doc_ids_bin"]))
+                sub = per_tok[t]
+                for ib, tb, pb in zip(*(sub.column(c).to_pylist() for c in (
+                        "doc_ids_bin", "tfs_bin", "positions_bin"))):
+                    tfs = decode_counts(tb)
+                    ids = decode_doc_ids(ib)
                     ndocs += len(ids)
                     dparts.append(np.repeat(ids, tfs))
-                    pparts.append(
-                        decode_positions(bytes(r["positions_bin"]), tfs))
+                    pparts.append(decode_positions(pb, tfs))
                 drep = np.concatenate(dparts)
                 pos = np.concatenate(pparts)
                 if dfm is not None and dfm.get((field, t)) == ndocs:
@@ -1070,37 +983,24 @@ class SearchEngine:
                 cached[i] = got
             else:
                 miss_by_field.setdefault(key[0], set()).add(key[1])
-        rows: list = []
+        got: dict = {}
         if miss_by_field:
-            cols = ("field", "term", "doc_ids_bin", "tfs_bin", "dls_bin")
-            pa_f = self._pa_filter_terms(miss_by_field)
-            rows = (self._pa_postings_rows(pa_f, cols)
-                    if pa_f is not None else None)
-            if rows is None:
-                pred = _functools_reduce(
-                    lambda a, b: a | b,
-                    [
-                        (F.col("field") == f) & F.col("term").isin(sorted(toks))
-                        for f, toks in miss_by_field.items()
-                    ],
-                )
-                rows = self.postings().filter(pred).select(*cols).collect()
+            got = _by_key(self._reader.read(
+                "postings",
+                ("field", "term", "doc_ids_bin", "tfs_bin", "dls_bin"),
+                [{"field": f, "term": toks}
+                 for f, toks in sorted(miss_by_field.items())]))
         # per-key sorted-unique (doc_id, tf, dl) arrays, the mask agg's
         # (sum tf, max dl).  All O(Σdf), no nkeys×ndocs dense state.
-        bufs: list[list] = [[] for _ in keys]
-        for r in rows:
-            i = idx.get((r["field"], r["term"]))
-            if i is not None:
-                bufs[i].append(r)
         uid_k, tf_k, dl_k = [], [], []
-        for i, blist in enumerate(bufs):
+        for i, key in enumerate(keys):
             if i in cached:
                 uid, tf, dl = cached[i]
-            elif not blist:
+            elif key not in got:
                 uid, tf, dl = empty64, empty64, empty64
             else:
-                uid, tf, dl = _decode_merged(blist)
-                self._term_lru.put(keys[i], (uid, tf, dl))
+                uid, tf, dl = _decode_merged(got[key])
+                self._term_lru.put(key, (uid, tf, dl))
             uid_k.append(uid)
             tf_k.append(tf)
             dl_k.append(dl)
@@ -1186,18 +1086,14 @@ class SearchEngine:
         clear_cache() drops them so benchmark cold trials stay cold.
         The block-max twin of the decoded-postings term LRU (both
         re-express the reference's per-session cached ColumnReaders,
-        SessionFactory.cs:396-403).  Caller must have checked that the
-        embedded postings dataset exists."""
+        SessionFactory.cs:396-403)."""
         if key in self._stats_lru:
             return self._stats_lru.get(key)
         self.stats_lru_misses += 1
         import numpy as np
-        import pyarrow.dataset as pads
 
-        kf = (pads.field("field") == key[0]) & (
-            pads.field("term") == key[1])
-        tbl = self._pa_dataset("postings").to_table(
-            columns=["block_id", "max_tf", "min_dl"], filter=kf)
+        tbl = self._reader.read("postings", ["block_id", "max_tf", "min_dl"],
+                                {"field": key[0], "term": key[1]})
         raw = tbl.num_rows
         if raw > self._BLOCKMAX_MAX_STAT_ROWS:
             res = None
@@ -1288,10 +1184,10 @@ class SearchEngine:
         from resin_spark import postings as P
         from resin_spark.build import BLOCK_SHIFT
 
-        if self._pa_dataset("postings") is None:
+        if self._reader.name != "pyarrow":
+            # chunked block reads are driver-local scans; through Spark
+            # each would be a job, so the standard strategies run
             return None
-        import pyarrow.dataset as pads
-
         keys = [(t.field, t.token) for t in matched]
         anchor = keys[0]
         stats = self.stats()
@@ -1303,22 +1199,12 @@ class SearchEngine:
             idf_of[key] = self.idf(st["n_docs"], dfm[key])
             avgdl_of[key] = st["avgdl"]
         self._evict_persisted()
-        by_field: dict[str, set] = {}
-        for f, tok in keys:
-            by_field.setdefault(f, set()).add(tok)
-        term_f = self._pa_filter_terms(by_field)
         # negative keys: unmatched terms are skipped (Reducer.cs:88-89);
         # matched ones decode per-chunk, restricted to candidate blocks
         negs = [kk for kk in (negs or []) if dfm.get(kk, 0) > 0]
-        neg_f = None
-        if negs:
-            neg_by_field: dict[str, set] = {}
-            for f, tok in negs:
-                neg_by_field.setdefault(f, set()).add(tok)
-            neg_f = self._pa_filter_terms(neg_by_field)
-            if neg_f is None:
-                return None
-        all_f = term_f if neg_f is None else (term_f | neg_f)
+        by_field: dict[str, set] = {}
+        for f, tok in keys + negs:
+            by_field.setdefault(f, set()).add(tok)
         pos_keys = set(keys)
         neg_keys = set(negs)
         # per-key per-block bound inputs (merged over segment rows: tf
@@ -1384,28 +1270,22 @@ class SearchEngine:
             # ONE pushed scan per chunk covers positive AND negative
             # keys (the filter is the union; rows split by key below) —
             # a NOT clause must not double the per-chunk scan count
-            rows = self._pa_postings_rows(
-                all_f & pads.field("block_id").isin(chunk_bids), cols)
-            if rows is None:
-                return None
-            decoded += sum(r["df_block"] for r in rows
-                           if (r["field"], r["term"]) in pos_keys)
-            neg_union = None
-            if neg_keys:
-                nrows = [r for r in rows
-                         if (r["field"], r["term"]) in neg_keys]
-                decoded += sum(r["df_block"] for r in nrows)
-                if nrows:
-                    neg_union = np.unique(np.concatenate(
-                        [P.decode_doc_ids(bytes(r["doc_ids_bin"]))
-                         for r in nrows]))
-            bufs: dict[tuple, list] = {}
-            for r in rows:
-                if (r["field"], r["term"]) in pos_keys:
-                    bufs.setdefault((r["field"], r["term"]), []).append(r)
+            got = _by_key(self._reader.read("postings", cols, [
+                {"field": f, "term": toks, "block_id": chunk_bids}
+                for f, toks in sorted(by_field.items())]))
+            dfs = {key: sum(sub.column("df_block").to_pylist())
+                   for key, sub in got.items()}
+            decoded += (sum(n for key, n in dfs.items() if key in pos_keys)
+                        + sum(n for key, n in dfs.items() if key in neg_keys))
+            nbins = [b for key, sub in got.items() if key in neg_keys
+                     for b in sub.column("doc_ids_bin").to_pylist()]
+            neg_union = (np.unique(np.concatenate(
+                [P.decode_doc_ids(b) for b in nbins])) if nbins else None)
             dec: dict[tuple, tuple] = {}
-            for key, blist in bufs.items():
-                uid, tf, dl = _decode_merged(blist)
+            for key, sub in got.items():
+                if key not in pos_keys:
+                    continue
+                uid, tf, dl = _decode_merged(sub)
                 w = idf_of[key] * (tf / (tf + K1 * (
                     one_minus_b + BB * dl / avgdl_of[key])))
                 dec[key] = (uid, w)
@@ -1567,31 +1447,23 @@ class SearchEngine:
                 "lru_hit": True,
             }
             return got
-        cols = ("df_block", "doc_ids_bin", "tfs_bin", "dls_bin")
-        rows = None
-        if self._pa_dataset("postings") is not None:
-            import pyarrow.dataset as pads
-
-            pa_f = (pads.field("field") == f) & (pads.field("term") == tok)
-            if blocks is not None:
-                pa_f = pa_f & pads.field("block_id").isin(blocks)
-            rows = self._pa_postings_rows(pa_f, cols)
-        if rows is None:
-            pred = (F.col("field") == f) & (F.col("term") == tok)
-            if blocks is not None:
-                pred = pred & F.col("block_id").isin(blocks)
-            rows = self.postings().filter(pred).select(*cols).collect()
-        n_postings = sum(r["df_block"] for r in rows)
+        where = {"field": f, "term": tok}
+        if blocks is not None:
+            where["block_id"] = blocks
+        tbl = self._reader.read(
+            "postings", ("df_block", "doc_ids_bin", "tfs_bin", "dls_bin"),
+            where)
+        n_postings = sum(tbl.column("df_block").to_pylist())
         self.last_and_stats[key] = {
             "blocks_filter": None if blocks is None else len(blocks),
             "postings_collected": int(n_postings),
         }
         if n_postings > self._AND_COLLECT_MAX_POSTINGS:
             return None
-        if not rows:
+        if not tbl.num_rows:
             e = np.empty(0, dtype=np.int64)
             return e, e, e
-        uid, tf, dl = _decode_merged(rows)
+        uid, tf, dl = _decode_merged(tbl)
         if blocks is None or (total_df is not None
                               and n_postings == total_df):
             # full-term reads are cacheable — including a RESTRICTED read
@@ -1749,10 +1621,11 @@ class SearchEngine:
         read again, see _file_memo), clear_cache() keeps it (IO
         metadata, not decoded query data — same contract as the cached
         datasets)."""
-        cached = self._pa_cache.get("__docs_rg__")
-        if cached is not None:
-            return None if cached == "n/a" else cached
-        ds = self._pa_dataset("docs")
+        if self._reader.name != "pyarrow":
+            return None
+        if self._docs_rg is not None:
+            return None if self._docs_rg == "n/a" else self._docs_rg
+        ds = self._reader.dataset("docs")
         out = "n/a"
         # footer pass is once per file and driver-local; still, bound
         # the file count so a pathological layout cannot stall warmup
@@ -1768,7 +1641,7 @@ class SearchEngine:
                     m = max(m, e[1])
                     cum.append(m)
                 out = (mins, cum, entries)
-        self._pa_cache["__docs_rg__"] = out
+        self._docs_rg = out
         return None if out == "n/a" else out
 
     def _rg_entries(self, f: str) -> list | None:
@@ -1859,7 +1732,7 @@ class SearchEngine:
                             # lists.  Refuse rather than return a
                             # narrower table.
                             return None
-                        parts.append(part)
+                        parts.append(R.utc_table(part))
             tbl = parts[0] if len(parts) == 1 else pa.concat_tables(parts)
             return tbl.filter(pc.is_in(
                 tbl["doc_id"], value_set=pa.array(need, type=pa.int64())))
@@ -1871,68 +1744,45 @@ class SearchEngine:
 
     def _fetch_hits(self, hits: list[tuple[int, float]],
                     sel: list[str] | None) -> DataFrame:
-        """Materialize driver-computed (doc_id, score) hits: pushed-down
-        doc_id IN point scan (min/max-pruned on the doc_id-sorted docs
-        table — no full scan, no gate: the hits are already collected so
-        the point path costs no extra action here)."""
-        if (len(hits) <= self._POINT_FETCH_MAX_K
-                and self._pa_dataset("docs") is not None):
-            # embedded point fetch: read exactly the hit rows through
-            # pyarrow (row-group stats prune on the doc_id filter — the
-            # docs files are doc_id-sorted), merge scores driver-side,
-            # and hand Spark a k-row local frame.  Zero jobs.  The
-            # targeted row-group reader serves bounded-row-group layouts
-            # (decode ∝ covering groups); the dataset scanner covers
-            # everything else.
-            import pyarrow.dataset as pads
-            from pyspark.sql.types import DoubleType, StructField, StructType
+        """Materialize collected (doc_id, score) hits: read exactly the hit
+        rows (doc_id IN, min/max-pruned on the doc_id-sorted docs files),
+        merge the scores and sort driver-side, and hand Spark the k-row
+        Arrow table.  On the pyarrow backend the targeted row-group
+        reader (_docs_point_table) serves bounded-row-group layouts
+        (decode ∝ covering groups), the dataset scanner everything else;
+        both are job-free."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import from_arrow_schema
 
-            # the schema alone: after refresh() a new Spark reader would
-            # list every segment dir and infer the schema (a job)
-            if self._docs_schema is None:
-                self._docs_schema = self.documents().schema
-            cols = self._ranked_cols(self._docs_schema.names, sel)
-            by_name = {fld.name: fld for fld in self._docs_schema.fields}
-            schema = StructType([by_name[c] for c in cols]
-                                + [StructField("score", DoubleType())])
-            if not hits:
-                # createDataFrame of an EMPTY local frame launches a job;
-                # one all-null local row cut by limit(0) stays job-free
-                return self.spark.createDataFrame(
-                    [(None,) * len(schema.fields)], schema=schema).limit(0)
-            names = list(dict.fromkeys(["doc_id"] + cols))
-            need = [int(d) for d, _ in hits]
-            tbl = (self._docs_point_table(need, names)
-                   if "segment" not in names else None)
-            if tbl is None:
-                tbl = self._pa_dataset("docs").to_table(
-                    columns=names,
-                    filter=pads.field("doc_id").isin(need),
-                )
-            pdf = tbl.to_pandas()
-            smap = {int(d): float(s) for d, s in hits}
-            pdf["score"] = pdf["doc_id"].map(smap)
-            # the final sort runs HERE (stable, same float64 keys and
-            # tie-break as the distributed orderBy) so the returned frame
-            # is a pre-ordered LocalRelation: collecting it is job-free —
-            # a Spark orderBy on 10 local rows would cost 3 scheduling
-            # round-trips (sampling + shuffle + collect)
-            pdf = pdf.sort_values(
-                ["score", "conv_id", "turn_idx"],
-                ascending=[False, True, True], kind="mergesort",
-            )[cols + ["score"]]
-            return self.spark.createDataFrame(pdf, schema=schema)
-        docs = self.documents()
-        lit = self.spark.createDataFrame(
-            [(int(d), float(s)) for d, s in hits],
-            "doc_id long, score double",
-        )
-        if hits and len(hits) <= self._POINT_FETCH_MAX_K:
-            docs = docs.filter(
-                F.col("doc_id").isin([int(d) for d, _ in hits])
-            )
-        out = docs.join(F.broadcast(lit), "doc_id")
-        return self._project_ranked(out, docs, sel)
+        docs = self._reader.schema("docs")
+        cols = self._ranked_cols(docs.names, sel)
+        schema = from_arrow_schema(pa.schema(
+            [docs.field(c).with_nullable(True) for c in cols]
+            + [pa.field("score", pa.float64())]))
+        if not hits:
+            # createDataFrame of an EMPTY local frame launches a job;
+            # one all-null local row cut by limit(0) stays job-free
+            return self.spark.createDataFrame(
+                [(None,) * len(cols + ["score"])], schema=schema).limit(0)
+        names = list(dict.fromkeys(["doc_id"] + cols))
+        need = [int(d) for d, _ in hits]
+        tbl = (self._docs_point_table(need, names)
+               if "segment" not in names else None)
+        if tbl is None:
+            tbl = self._reader.read("docs", names, {"doc_id": need})
+        smap = {int(d): float(s) for d, s in hits}
+        tbl = tbl.append_column("score", pa.array(
+            [smap[d] for d in tbl.column("doc_id").to_pylist()],
+            pa.float64()))
+        # the final sort runs HERE (same float64 keys and tie-break as
+        # the distributed orderBy) so the returned frame is a pre-ordered
+        # LocalRelation: collecting it is job-free — a Spark orderBy on
+        # 10 local rows would cost 3 scheduling round-trips (sampling +
+        # shuffle + collect)
+        tbl = tbl.sort_by([("score", "descending"), ("conv_id", "ascending"),
+                           ("turn_idx", "ascending")])
+        return self.spark.createDataFrame(tbl.select(cols + ["score"]),
+                                          schema=schema)
 
     def _docs_bytes(self) -> int:
         """Catalyst's size estimate for the docs table (file-listing
@@ -2226,15 +2076,13 @@ class SearchEngine:
         }
         if query is not None:
             q = parse_query(query) if isinstance(query, dict) else query
-            # the reported plan must show the FULL pipeline (postings
-            # scan, scoring, fetch join), and diagnostics must not pay a
-            # top-k execution — bypass the eager point-fetch gate via an
-            # instance attribute that shadows the class threshold
-            self._POINT_FETCH_MIN_DOCS_BYTES = 1 << 62
-            try:
-                plan = self.search(q, k=10)
-            finally:
-                del self._POINT_FETCH_MIN_DOCS_BYTES
+            # the reported plan is the FULL distributed pipeline (postings
+            # scan, scoring, top-k, docs join), built lazily: no top-k
+            # execution, and no engine state changes under a concurrent
+            # query
+            ranked = self._ranked(q, "surface").orderBy(
+                F.desc("score"), F.asc("doc_id")).limit(10)
+            plan = self._join_docs(ranked, 10, None)
             out["plan"] = plan._jdf.queryExecution().executedPlan().toString()
         return out
 

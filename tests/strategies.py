@@ -25,8 +25,8 @@ def forced_strategy(engine, name: str):
 
     'driver' is the size-gated driver-scored fast path with embedded
     pyarrow IO (the default for a local root at fixture scale);
-    'driver_sparkio' is driver scoring through Spark collects, the
-    remote-root form; 'distributed' disables driver scoring, so the
+    'driver_sparkio' is driver scoring on the Spark read backend (see
+    spark_io), the remote-root form; 'distributed' disables driver scoring, so the
     distributed mask-class fold runs; 'and_pruned' sets the Σdf cap to
     0, so every pure-AND query runs the block-pruned intersection path
     and everything else falls back to the distributed fold; 'blockmax'
@@ -40,9 +40,10 @@ def forced_strategy(engine, name: str):
     cache; restoring sets the budget back to _TERM_LRU_MAX_POSTINGS."""
     overrides = _OVERRIDES.get(name, {})
     engine.__dict__.update(overrides)
-    prev_io = engine.io_mode
+    prev_io = engine.io_mode, engine._reader
     if name == "driver_sparkio":
         engine.io_mode = "spark"
+        engine._pick_reader()
     if name in ("blockmax", "and_pruned"):
         engine._term_lru.clear()
         engine._term_lru.budget = 0
@@ -51,5 +52,14 @@ def forced_strategy(engine, name: str):
     finally:
         for attr in overrides:
             del engine.__dict__[attr]
-        engine.io_mode = prev_io
+        engine.io_mode, engine._reader = prev_io
         engine._term_lru.budget = engine._TERM_LRU_MAX_POSTINGS
+
+
+@contextmanager
+def spark_io(engine):
+    """Run `engine` on the Spark read backend (io_mode='spark': every
+    driver-side read is filter().select().toArrow()), then restore its
+    backend."""
+    with forced_strategy(engine, "driver_sparkio"):
+        yield engine

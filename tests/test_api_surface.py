@@ -107,7 +107,11 @@ def test_parse_flat_executes(engine, oracle):
 
 
 def test_engine_diagnostics(spark, engine):
+    # diagnostics writes no engine state (a concurrent query must not
+    # see a changed fetch route)
+    keys = set(engine.__dict__)
     d = engine.diagnostics({"or": {"text": "banana"}})
+    assert set(engine.__dict__) == keys
     assert d["root"] == engine.root
     assert d["fields"]["text"]["n_terms"] > 50
     assert d["fields"]["text"]["n_postings"] >= d["fields"]["text"]["n_terms"]

@@ -27,17 +27,9 @@ def spark_engine(spark, index_root):
 
 def test_embedded_engages_on_local_root(engine):
     assert engine.io_mode == "auto"
-    assert engine._pa_dataset("postings") is not None
-    assert engine._pa_dataset("docs") is not None
-
-
-def test_local_path_gating():
-    assert SearchEngine._local_path("s3://bucket/idx") is None
-    assert SearchEngine._local_path("hdfs://nn/idx") is None
-    assert SearchEngine._local_path("/definitely/not/a/dir/xyz") is None
-    assert SearchEngine._local_path("/tmp") == "/tmp"
-    assert SearchEngine._local_path("file:/tmp") == "/tmp"
-    assert SearchEngine._local_path("file:///tmp") == "/tmp"
+    assert engine._reader.name == "pyarrow"
+    assert engine._reader.dataset("postings") is not None
+    assert engine._reader.dataset("docs") is not None
 
 
 def test_embedded_full_column_parity(engine, spark_engine):
@@ -89,6 +81,37 @@ def test_embedded_warm_query_is_job_free(engine):
         assert len(sc.statusTracker().getJobIdsForGroup(g)) == 0, out.columns
 
 
+def test_phrase_after_refresh_is_job_free(spark, tmp_path):
+    """On a positional local root, the first phrase query after an
+    append + refresh() reads the postings layout off the pyarrow
+    dataset: neither refresh() nor the query builds a Spark reader, so
+    neither launches a job."""
+    from pyspark.sql import functions as F
+
+    from resin_spark import api, build
+    from resin_spark.fixtures import transcripts_df
+
+    root = str(tmp_path / "pos_idx")
+    t = transcripts_df(spark, 16, 4)
+    cid = F.col("conv_id")
+    build.build_index(spark, t.filter(cid < "conv00000012"), root,
+                      positions=True)
+    eng = SearchEngine(spark, root)
+    phrase = "apple apples"
+    assert eng.phrase_search(phrase, k=5).collect()  # non-vacuous
+    api.append_docs(spark, t.filter(cid >= "conv00000012"), root)
+    sc = spark.sparkContext
+    g = uuid.uuid4().hex
+    sc.setJobGroup(g, "probe")
+    try:
+        eng.refresh()
+        rows = eng.phrase_search(phrase, k=5).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    assert rows
+    assert len(sc.statusTracker().getJobIdsForGroup(g)) == 0
+
+
 def test_point_fetch_burst_keeps_fd_count_flat(engine):
     """Each point fetch opens the covering docs files and must close
     them itself: the process's open descriptors stay flat across a burst
@@ -96,7 +119,7 @@ def test_point_fetch_burst_keeps_fd_count_flat(engine):
     import os
 
     names = ["doc_id", "conv_id", "turn_idx", "text"]
-    ids = sorted(engine._pa_dataset("docs").to_table(
+    ids = sorted(engine._reader.dataset("docs").to_table(
         columns=["doc_id"])["doc_id"].to_pylist())
     assert engine._docs_point_table(ids[:2], names) is not None
 
@@ -124,7 +147,7 @@ def test_embedded_respects_snapshot_pin(spark, tmp_path):
     snaps = build.list_snapshots(root)
     old = min(snaps)
     pinned = SearchEngine(spark, root, snapshot=old)
-    assert pinned._pa_dataset("postings") is not None
+    assert pinned._reader.dataset("postings") is not None
     assert pinned.topk({"or": {"text": "banana"}}, k=5) == before
     # and the newest pointer agrees post-compaction as well
     assert SearchEngine(spark, root).topk(
@@ -133,8 +156,9 @@ def test_embedded_respects_snapshot_pin(spark, tmp_path):
 
 def test_spark_io_mode_forces_spark_reads(engine):
     e = SearchEngine(engine.spark, engine.root, io_mode="spark")
-    assert e._pa_dataset("postings") is None
-    assert e._pa_dataset("docs") is None
+    assert e._reader.name == "spark"
+    e.refresh()
+    assert e._reader.name == "spark"
 
 
 def test_term_lru_repeat_query_skips_postings_read(engine, monkeypatch):
@@ -149,8 +173,15 @@ def test_term_lru_repeat_query_skips_postings_read(engine, monkeypatch):
     def boom(*a, **k):
         raise AssertionError("postings store touched on a warm repeat")
 
+    read = engine._reader.read
+
+    def no_postings(artifact, *a, **k):
+        if artifact == "postings":
+            boom()
+        return read(artifact, *a, **k)
+
     monkeypatch.setattr(engine, "postings", boom)
-    monkeypatch.setattr(engine, "_pa_postings_rows", boom)
+    monkeypatch.setattr(engine._reader, "read", no_postings)
     assert engine.topk(q, k=5) == want
     monkeypatch.undo()
     # a public clear_cache must drop the LRU; the next query re-reads

@@ -88,22 +88,37 @@ def test_postings_sorted_within_files(engine):
 def test_point_fetch_path_identical_and_pushed(engine, monkeypatch):
     """X8 big-table fetch: with the docs-size gate forced open, search()
     fetches via a pushed-down doc_id IN point scan and returns EXACTLY
-    the rows of the broadcast-join path."""
+    the rows of the broadcast-join path.  On the Spark read backend (the
+    remote-root form) that scan is the docs read toArrow() runs, so its
+    plan is the one checked: once for driver-scored hits, once for the
+    distributed fold's eager top-k."""
+    from strategies import forced_strategy, spark_io
+
     from resin_spark.executor import SearchEngine
 
     q = {"and": {"text": "banana", "not": {"text": "apples"}}}
     want = engine.search(q, k=5).collect()
 
-    # the pushed point scan is the REMOTE-root fetch path: force spark IO
-    # (embedded IO would answer with a job-free local relation instead)
+    plans = []
+    frame = type(engine.documents())
+    to_arrow = frame.toArrow
+
+    def spy(df):
+        plans.append(_plan(df))
+        return to_arrow(df)
+
+    monkeypatch.setattr(frame, "toArrow", spy)
     monkeypatch.setattr(SearchEngine, "_POINT_FETCH_MIN_DOCS_BYTES", 0)
-    monkeypatch.setattr(engine, "io_mode", "spark")
-    got_df = engine.search(q, k=5)
-    plan = _plan(got_df)
-    assert "doc_id IN" in plan or "doc_id, [" in plan or "In(doc_id" in plan, plan
-    got = got_df.collect()
-    assert got == want
-    assert len(got) > 0
+    for strategy in ("driver", "distributed"):
+        plans.clear()
+        with spark_io(engine), forced_strategy(engine, strategy):
+            got = engine.search(q, k=5).collect()
+        assert got == want and len(got) > 0, strategy
+        docs_reads = [p for p in plans if "conv_id" in p]
+        assert docs_reads, plans
+        for plan in docs_reads:
+            assert ("doc_id IN" in plan or "doc_id, [" in plan
+                    or "In(doc_id" in plan), plan
 
 
 def test_point_fetch_empty_result(engine, monkeypatch):

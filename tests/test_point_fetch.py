@@ -54,8 +54,7 @@ def test_point_fetch_parity_across_paths(spark, index_root):
     assert scanner._docs_rg_index() is None
     assert _rows(scanner.search(q, k=8)) == want
 
-    sparkio = SearchEngine(spark, index_root)
-    sparkio.io_mode = "spark"  # no pa dataset -> broadcast-join fetch
+    sparkio = SearchEngine(spark, index_root, io_mode="spark")
     assert _rows(sparkio.search(q, k=8)) == want
 
 

@@ -19,6 +19,7 @@ import math
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from strategies import spark_io
 
 from resin_spark import api
 from resin_spark import build as B
@@ -135,14 +136,12 @@ def pos_engine_s(request, pos_engine):
     budget, so the Spark read actually runs even when the shared engine
     is warm from the driver-strategy pass."""
     if request.param == "driver_sparkio":
-        prev = pos_engine.io_mode
-        pos_engine.io_mode = "spark"
         pos_engine._pos_lru.clear()
         pos_engine._pos_lru.budget = 0
         try:
-            yield pos_engine
+            with spark_io(pos_engine):
+                yield pos_engine
         finally:
-            pos_engine.io_mode = prev
             pos_engine._pos_lru.budget = pos_engine._POS_LRU_MAX_OCC
     elif request.param == "distributed":
         pos_engine._DRIVER_SCORE_MAX_POSTINGS = -1
@@ -451,7 +450,7 @@ def test_append_positions_honored_after_truncate_index(
     assert post.filter(F.col("positions_bin").isNull()).count() == 0
 
 
-def test_phrase_positional_lru_warm_repeat(spark, pos_engine):
+def test_phrase_positional_lru_warm_repeat(spark, pos_engine, monkeypatch):
     """A repeat phrase query serves its positional decodes from the
     occurrence LRU: once the first run's reads covered each term's
     entire df (single-block fixture), the repeat issues ZERO additional
@@ -459,13 +458,14 @@ def test_phrase_positional_lru_warm_repeat(spark, pos_engine):
     pos LRU) with identical hits; clear_cache() re-colds both."""
     pos_engine.clear_cache()
     calls = []
-    orig = pos_engine._pa_postings_rows
+    orig = pos_engine._reader.read
 
-    def spy(*a, **kw):
-        calls.append(1)
-        return orig(*a, **kw)
+    def spy(artifact, *a, **kw):
+        if artifact == "postings":
+            calls.append(1)
+        return orig(artifact, *a, **kw)
 
-    pos_engine._pa_postings_rows = spy
+    monkeypatch.setattr(pos_engine._reader, "read", spy)
     try:
         # "apple apples" is planted adjacently by the fixture generator
         # (i % 17 == 3 docs), so the AND candidate set and the phrase
@@ -489,5 +489,4 @@ def test_phrase_positional_lru_warm_repeat(spark, pos_engine):
         pos_engine.refresh()
         assert not pos_engine._pos_lru and pos_engine._pos_lru.used == 0
     finally:
-        del pos_engine._pa_postings_rows
         pos_engine.clear_cache()
